@@ -13,13 +13,18 @@ in BOTH implementations so last-ulp differences cannot flip the hash.
 
 Split into per-family modules in round 4 (the monolith passed 5,800
 lines); importing this package imports every family in a FIXED order, so
-registration order — the driver's rotating-verification lever — is
-unchanged and explicit below.
+registration order is unchanged and explicit below. queries() and
+oracle_sql() return the registry in correctness-window order, computed by
+window_order() from the CORRECTNESS_r*.json records at the repo root.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+import re
+from collections.abc import Callable, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,7 +36,7 @@ from delfos_etl_pipeline_spark.queries._registry import (  # noqa: F401
 )
 
 # Family modules register their queries at import time; this order IS the
-# registry order (and therefore the tail order of the driver window).
+# registry order (and therefore the tie order of the correctness window).
 from delfos_etl_pipeline_spark.queries import (  # noqa: E402,F401
     scans_core,
     joins_reshape,
@@ -49,1061 +54,58 @@ from delfos_etl_pipeline_spark.queries import (  # noqa: E402,F401
     warehouse,
 )
 
-# Driver-window rotation. UNVERIFIED ASSUMPTION, treat accordingly: the
-# driver appeared to check only the FIRST ~50 registered queries in rounds
-# 1-2; registration order is therefore used as a coverage lever, but the
-# REAL regression gate is tools/check_oracle.py, which runs EVERY
-# registered query against its oracle and is executed locally before each
-# commit — if the driver ever samples differently, nothing ships unchecked.
-# Round 8 window (VERDICT r7 items 1-7): genuinely-NEW registrations
-# and oracle upgrades land here AS THEY SHIP — a name goes on this list
-# in the same commit that registers it, never before
-# (tests/test_registry.py asserts every window name resolves in
-# QUERIES, so a claimed-but-unshipped entry fails CI instead of being
-# silently dropped by the `if n in QUERIES` filter).
-# Round 9 window (VERDICT r8 items 1, 3-6): finish the stale-evidence
-# refresh with the dtype-width casts first, certify the newly registered
-# bench phase splits, and give the six rows-only structural twins fresh
-# rows. Same contract as every round: a name lands here in the SAME
-# commit that registers/changes it (_driver_order() and
-# tests/test_registry.py hard-fail on unknown names).
-# Round 10 window (VERDICT r9 items 2, 3, 6): lead with
-# dedup_substring_incremental's re-cert (its newest driver row, r8,
-# predates the write-once fix at queries/dedup.py — the
-# certified-code-equals-benched-code invariant), then the new
-# persisted-index registrations, then the full 39-name r3-evidence
-# cohort oldest-first, then 6 r4 names (the two PQ oracle-sharing twins
-# first). Exactly 50. Same contract as every round: a name lands here
-# in the SAME commit that registers/changes it (_driver_order() and
-# tests/test_registry.py hard-fail on unknown names).
-# Round 11 window (VERDICT r10 items 1-2): lead with the recerts —
-# curate_nightly_ingest (body factored into the shared
-# _disposition_plan and its oracle regenerated from the parameterized
-# template; DuckDB-verified bit-identical to the r10 literal before
-# commit) and dedup_minhash_incremental_indexed (write_minhash_index
-# factored into _write_minhash_relations for the append-mode merge;
-# derivation unchanged), plus the two PQ probes (read_pq_index gained
-# the corrupt-sidecar guard, ADVICE r10) — then the new maintenance
-# registration, then the FULL 40-name r4-evidence cohort, then 5 r5
-# names to fill exactly 50 (the evidence floor moves to r5). Same
-# contract as every round: a name lands here in the SAME commit that
-# registers/changes it (_driver_order() and tests/test_registry.py
-# hard-fail on unknown names).
-# Round 12 window (VERDICT r11 items 1-3, 5): lead with the recerts —
-# every query whose code path the deletion/unification work touched:
-# curate_nightly_ingest_day2 (day-0 indexes now COPIED from the shared
-# ensure_* materializations instead of privately rebuilt — VERDICT r11
-# item 5 — and its merges are counted + retry-safe), curate_nightly_ingest
-# + dedup_substring_incremental (ensure_gram_index now writes the COUNTED
-# deletable index form; probed gram set bit-identical, locally
-# re-verified), dedup_minhash_incremental_indexed (probe reads are
-# tombstone-aware), sim_pq_probe + sim_ivfpq_probe (read_pq_index gained
-# the before-population sidecar bounds check, ADVICE r11, plus the
-# tombstone anti-join; the index build factored into _ensure_pq_index) —
-# then the two NEW deletion registrations, then the full 38-name
-# r5-evidence cohort and 3 r6 names to fill exactly 50 (the remaining 12
-# r6 names lead r13; correctness-first recerts outrank finishing the
-# cohort in one round). Same contract as every round: a name lands here
-# in the SAME commit that registers/changes it (_driver_order() and
-# tests/test_registry.py hard-fail on unknown names).
-# Round 13 window (VERDICT r12 items 1, 3): lead with the recerts —
-# every query whose code path the r13 compaction hardening touched:
-# curate_nightly_ingest_day2 + curate_nightly_ingest_day3 (their state
-# builders now clone via sinks.clone_index, which carries the IVF
-# sibling tombstone relation — ADVICE r12; behavior-identical here
-# because both clone pre-tombstone state, locally re-verified exact),
-# sim_pq_probe_compacted (compact_pq_index moved to the
-# snapshot-retired tombstone protocol) — then the NEW registration
-# curate_nightly_ingest_day4 (oracle-certified compaction for
-# gram/MinHash/IVF, closing the lifecycle) and emb_project_pca's
-# exact-oracle CONVERSION (VERDICT r12 item 4: the ml.feature.PCA
-# eigendecomposition replaced by the deterministic sign-pinned integer
-# power iteration, unrolled-HUGEINT-CTE oracle; the rows-only set drops
-# to five) and curate_nightly_ingest_day2_streamed (the STREAMING
-# maintenance path under the day-2 oracle verbatim: streaming-merged ≡
-# batch-merged ≡ rebuilt), then the full 12-name r6-evidence cohort and
-# 32 oldest r7 names to fill exactly 50 (the remaining 16 r7 names lead
-# r14). Same contract as every round: a name
-# lands here in the SAME commit that registers/changes it
-# (_driver_order() and tests/test_registry.py hard-fail on unknown
-# names).
-# --- round 14 window (exactly 50 names; leads _driver_order) ---
-# VERDICT r13 item 6: the 16 remaining r7-evidence names LEAD, then the
-# touched-path recerts (the lifecycle-admin fixes touched every
-# merge/compact path: generation-debt watermark in all four compact_*,
-# pre_move-deferred plain-empty clear in the IVF/PQ merges; the IVF
-# large-k assignment touched sim_ivf_build's path), then the four new
-# registrations (sim_pq_probe_streamed — VERDICT item 1, the PQ
-# streaming sink under the oracle gate; curate_nightly_ingest_day3_streamed
-# — VERDICT item 5, remove/compact interleaved with a live drain;
-# sim_ivf_build_bigk + sim_pq_adc_bigk — VERDICT item 4's matmul
-# engines, assignment and encode, hash-gated), then the 24 oldest r8
-# names.
-# Floor after this round: r8. Same contract as every round: a name
-# lands here in the SAME commit that registers/changes it.
-# --- round 15 window (exactly 50 names; leads _driver_order) ---
-# VERDICT r14 item 5: the 24 remaining r8-evidence names LEAD (the
-# floor rotates r8 -> r9), then the touched-path recert
-# (sim_pq_adc_bigk — ADVICE r14's NaN mask landed inside
-# _pq_encode_matmul, this name's engine route), then the two new
-# registrations (sim_ivf_lifecycle_bigk + sim_pq_lifecycle_bigk —
-# VERDICT r14 item 3's certified large-k maintenance chapters: every
-# merge/re-merge assignment and encode routed through the Arrow matmul
-# engines, sharing the bigk build/ADC oracles verbatim), then the 23
-# oldest r9 names (registry order) to fill exactly 50 (the remaining
-# 24 r9 names lead r16). Same contract as every round: a name lands
-# here in the SAME commit that registers/changes it.
-# --- round 16 window (exactly 50 names; leads _driver_order) ---
-# VERDICT r15 item 8: lead with the touched-path recerts — every query
-# whose code path this optimization round OR round 15's engine commits
-# changed and whose newest driver row predates the change. First the
-# r16-touched set (array_intersect verification + persisted prefix in
-# dedup_jaccard_prefix; the silhouette broadcast-fold rewrite;
-# spread_scan placements/re-key in simpson/spearman/corr/classifier;
-# the spread_scan sizing refactor shared by stats_bootstrap_ci_mean and
-# emb_standardize), then the r15 SQL-text/one-job-fetch/posexplode
-# family the r15 window did not sample (VERDICT r15 item 8's explicit
-# list: emb_kmeans_step and the PQ/IVF probes), then 24 oldest
-# remaining r9-evidence names (registry order) to fill exactly 50
-# (a_distinct_rollup_hll + emb_project_pca remain for the next window).
-# Same contract as every round: a name lands here in the SAME commit
-# that registers/changes it.
-_R16_RECERT: list[str] = [
-    # round 16 touched paths
-    "dedup_jaccard_prefix", "emb_silhouette_centroid",
-    "text_simpson_diversity", "text_quality_classifier",
-    "profile_spearman_corr", "profile_corr_matrix",
-    "stats_bootstrap_ci_mean", "emb_standardize",
-    # round 15 touched paths whose newest driver row predates the change
-    "emb_kmeans_step", "sim_ivfpq_topk", "sim_ivfpq_probe",
-    "sim_pq_probe", "sim_pq_probe_compacted", "sim_pq_probe_deleted",
-    "sim_pq_adc_topk", "sim_ivf_build", "sim_ivf_build_bigk",
-    "emb_centroid_by_label", "emb_anova_f_topdims",
-    "sim_ivf_recall_eval", "recsys_item_cosine",
-    "basket_association_rules", "curate_nightly_ingest",
-    "curate_nightly_ingest_day2", "curate_nightly_ingest_day3",
-    "curate_nightly_ingest_day4",
-]
-
-# 24 oldest remaining r9-evidence names (registry order) to fill the
-# window to exactly 50.
-_R16_R9_FILL: list[str] = [
-    "sim_ivf_probe", "dedup_minhash_incremental_indexed", "text_langid",
-    "mm_binary_meta", "text_stats", "text_token_count",
-    "sim_knn_allpairs", "dedup_fuzzy_levenshtein", "sim_ivf_topk",
-    "dedup_clusters", "dedup_exact", "dedup_exact_rows",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-    "sample_bernoulli", "sample_stratified", "sample_train_test_split",
-    "text_fingerprint", "tpcds_q67_topk_rollup",
-    "dedup_minhash_lsh_prod", "dedup_simhash_prod", "sim_ivf_topk_prod",
-    "shard_train_split_prod",
-]
-
-_R15_R8_LEAD: list[str] = [
-    "tpch_q10_returned_items", "tpch_q18_large_orders",
-    "tpch_q3_shipping_priority", "tpch_q5_local_supplier",
-    "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping",
-    "tpch_q8_market_share", "tpch_q13_cust_order_dist",
-    "tpch_q15_top_supplier", "tpch_q17_small_qty_revenue",
-    "tpch_q19_disjunctive_revenue", "tpch_q21_waiting_suppliers",
-    "dedup_embedding_lsh", "dedup_semdedup_survivors",
-    "dedup_top_duplicate_spans", "emb_mutual_knn_clusters",
-    "emb_kmeans_train", "curate_pipeline_substr", "curate_dsir_resample",
-    "curate_semantic_decontaminate", "mm_image_dhash_wide",
-    "mm_audio_vad", "asof_join_events", "text_quality_classifier",
-]
-
-_R15_RECERT: list[str] = [
-    "sim_pq_adc_bigk",  # _pq_encode_matmul gained the NaN->+inf mask
-        # before argmin (ADVICE r14: array_min orders NaN greatest, a
-        # bare np.argmin returned the first NaN index) — behavior-
-        # identical on finite embeddings, locally re-verified exact
-]
-
-_R15_NEW: list[str] = [
-    "sim_ivf_lifecycle_bigk",  # certified large-k IVF MAINTENANCE
-        # (VERDICT r14 item 3): 40 cells live through build -> merge ->
-        # remove -> compact -> re-merge with every assignment on
-        # _assign_matmul; shares _IVF_BUILD_BIGK_ORACLE verbatim, so
-        # one hash pins maintained ≡ rebuilt at production-k routing
-    "sim_pq_lifecycle_bigk",  # the PQ twin: 40 centroids/subspace live
-        # through the same history with every encode on
-        # _pq_encode_matmul; shares _PQ_ADC_BIGK_ORACLE verbatim
-]
-
-# 23 oldest r9-evidence names (registry order) to fill the window to
-# exactly 50 (the remaining 24 r9 names lead r16).
-_R15_R9_FILL: list[str] = [
-    "s1_scan_project_filter", "a1_pipeline_long", "streaming_window_agg",
-    "j1_broadcast_dim_join", "f_scalar_suite", "tpch_q1_pricing_summary",
-    "tpch_q12_priority_by_status", "tpch_q22_dormant_customers",
-    "tpch_q2_min_cost_supplier", "tpch_q11_important_stock",
-    "tpch_q16_supplier_part_count", "tpch_q20_promotable_suppliers",
-    "w4_trailing_range_frame", "f_array_unnest_stats", "f_array_ops",
-    "sql_facade_text_query", "j_null_safe_join", "set_ops_user_segments",
-    "ts_gap_fill", "f_json_extract", "tpcds_q3_brand_by_year",
-    "tpcds_q27_rollup_avgs", "tpcds_q36_margin_rank",
-]
-
-_R14_R7_LEAD: list[str] = [
-    "text_readability", "shard_balance_report",
-    "curate_quality_gate_sweep", "text_bpe_encode_corpus",
-    "text_blocklist_screen", "text_fertility_by_lang",
-    "streaks_gaps_islands", "risk_var_es_daily", "events_fano_hourly",
-    "dq_uniqueness_profile", "orders_median_gap_days", "ivm_agg_merge",
-    "funnel_negative_condition", "stats_bootstrap_ci_mean",
-    "dq_null_rate_daily", "funnel_time_to_convert",
-]
-
-_R14_RECERT: list[str] = [
-    "curate_nightly_ingest_day2",  # gram/MinHash/IVF merge paths
-        # (pre_move clear, watermark-recording compactors upstream)
-    "curate_nightly_ingest_day2_streamed",  # streaming sinks over the
-        # same touched merge paths
-    "curate_nightly_ingest_day4",  # the compaction flagship: all three
-        # compact_* now record the generation watermark; gram compaction
-        # self-heals before its schema read
-    "sim_pq_probe_compacted",  # PQ compaction (watermark + swap)
-    "sim_ivf_build",  # IVF assignment large-k form (matmul path)
-    "sim_ivfpq_probe",  # IVF+PQ composition end-to-end
-]
-
-_R14_NEW: list[str] = [
-    "sim_pq_probe_streamed",  # the PQ streaming ingest sink certified
-        # (VERDICT r13 item 1): partial-corpus index + availableNow
-        # drain through run_pq_index_ingest, probed against
-        # _PQ_ADC_ORACLE verbatim — streamed ≡ batch ≡ rebuilt
-    "curate_nightly_ingest_day3_streamed",  # remove + compact
-        # INTERLEAVED WITH A LIVE STREAM (VERDICT r13 item 5): takedown
-        # after epoch 0, full three-family compaction after epoch 1,
-        # epoch 2 merging onto the compacted store; shares _DAY3_ORACLE
-        # verbatim, so one hash pins the merge-vs-compact race contract
-    "sim_ivf_build_bigk",  # the large-k Arrow matmul assignment engine
-        # (VERDICT r13 item 4) under the hash gate: 40 cells cross
-        # _INLINE_MAX_CELLS, the full-corpus assignment routes through
-        # _assign_matmul, and the LIMIT-40 argmax-cosine oracle replays
-        # it bit-for-bit
-    "sim_pq_adc_bigk",  # the pq_encode twin: 40 centroids per subspace
-        # cross _EXPR_MAX_CENTROIDS, the encode routes through
-        # _pq_encode_matmul, and the LIMIT-40 ADC oracle replays every
-        # code and LUT term bit-for-bit
-]
-
-# 24 oldest r8-evidence names (registry order) to fill the window to
-# exactly 50 (the remaining 24 r8 names lead r15).
-_R14_R8_FILL: list[str] = [
-    "a1_tumbling_window_agg", "a5_group_multi_agg",
-    "streaming_stream_join", "streaming_stateful_totals", "j2_anti_join",
-    "j3_fact_dim_join", "j4_left_join_stats", "j5_outer_window_align",
-    "r1_unpivot", "r4_pivot", "o2_topk", "w1_latest_per_key",
-    "w2_lag_delta", "w3_running_sum", "a_percentiles", "agg_cube",
-    "agg_grouping_sets", "a_distinct_count", "a_approx_distinct",
-    "hypertable_rollup", "range_join_intervals", "agg_salted_skew",
-    "tpch_q4_order_priority", "tpch_q14_promo_effect",
-]
-
-_R13_RECERT: list[str] = [
-    "curate_nightly_ingest_day2",
-    "curate_nightly_ingest_day3",
-    "sim_pq_probe_compacted",
-]
-
-_R13_NEW: list[str] = [
-    "curate_nightly_ingest_day4",  # certified COMPACTION for the
-        # gram/MinHash/IVF families (VERDICT r12 item 1): the day-3
-        # post-takedown state cloned, physically rewritten by the three
-        # compact_* passes, and re-probed with the day-3 batch; shares
-        # _DAY3_ORACLE verbatim, so one hash pins
-        # compacted ≡ tombstoned ≡ rebuilt for all three families
-    "emb_project_pca",  # exact-oracle conversion (VERDICT r12 item 4):
-        # deterministic sign-pinned integer power iteration, fit
-        # replayed bit-for-bit by the unrolled HUGEINT-CTE oracle;
-        # leaves the rows-only set (six → five)
-    "curate_nightly_ingest_day2_streamed",  # the streaming sinks
-        # (streaming/index_ingest.py) under the oracle gate: day-1
-        # keeps drained through epoch-tagged foreachBatch merges, day-2
-        # batch probed against the streamed state; shares _DAY2_ORACLE
-        # verbatim, so one hash pins streaming ≡ batch maintenance
-]
-
-# The full r6-evidence cohort (12 names, registry order): zero code
-# changes, fresh driver rows continue the oldest-first freshness
-# rotation (VERDICT r12 item 3).
-_R13_R6_REFRESH: list[str] = [
-    "dedup_embedding_cosine", "sim_knn_bruteforce", "sim_lsh_bucketed",
-    "emb_standardize", "emb_anova_f_topdims", "text_inverted_index",
-    "text_collocations_pmi", "sample_token_budget", "pack_sequences_ctx",
-    "emb_scalar_quantize", "text_lm_bigram_score", "user_event_entropy",
-]
-
-# 32 oldest r7-evidence names (registry order) to fill the window to
-# exactly 50 (the remaining 16 r7 names lead r14).
-_R13_R7_FILL: list[str] = [
-    "streaming_hopping_window_agg", "promo_uplift_did",
-    "revenue_waterfall", "orders_ship_latency_percentiles",
-    "layout_hilbert_key", "sample_systematic", "sample_domain_cap",
-    "sample_domain_temperature", "dedup_exact_substring",
-    "graph_degree_distribution", "dedup_cluster_keep_policy",
-    "dedup_threshold_sweep", "dedup_url_manifest",
-    "dedup_minhash_est_error", "dedup_rate_by_source", "emb_kmeans_step",
-    "emb_norm_profile", "emb_cosine_hist_sampled",
-    "sim_matryoshka_recall_eval", "text_zipf_fit",
-    "text_novelty_fraction", "curate_decontaminate_spans",
-    "curate_boilerplate_strip", "curate_ppl_buckets",
-    "curate_contamination_report", "mm_magic_profile",
-    "mm_audio_spectrogram", "mm_image_dhash_dedup", "mm_patch_grid",
-    "mm_video_scene_cuts", "asof_join_tolerance", "asof_join_nearest",
-]
-
-_R12_RECERT: list[str] = [
-    "curate_nightly_ingest_day2",
-    "curate_nightly_ingest",
-    "dedup_substring_incremental",
-    "dedup_minhash_incremental_indexed",
-    "sim_pq_probe",
-    "sim_ivfpq_probe",
-]
-
-_R12_NEW: list[str] = [
-    "curate_nightly_ingest_day3",  # certified index DELETION (VERDICT
-        # r11 item 1): takedown manifest removed from the merged
-        # gram/MinHash/IVF state (negative refcounts + tombstones), the
-        # removed documents re-ingested against the post-takedown
-        # indexes; oracle = three-generation from-scratch replay over
-        # (corpus ∪ k1 ∪ k2) ∖ manifest
-    "sim_pq_probe_deleted",  # the fourth family's deletion: tombstoned
-        # PQ codes clone, ADC top-k ≡ re-encode over corpus ∖ manifest
-    "sim_pq_probe_compacted",  # certified COMPACTION: the tombstoned
-        # clone physically rewritten (compact_pq_index via staged_swap)
-        # probes bit-identically — shares the deleted oracle, so one
-        # hash pins compaction-invisibility under the driver gate
-]
-
-# The full r5-evidence cohort (38 names, registry order): zero code
-# changes, fresh driver rows continue the oldest-first freshness
-# rotation (VERDICT r11 item 3).
-_R12_STALE_REFRESH: list[str] = [
-    "o5_keyset_pagination", "sample_neyman_allocation",
-    "sample_class_balance", "er_fuzzy_blocked", "dedup_containment",
-    "dedup_lsh_recall_eval", "emb_silhouette_centroid",
-    "sim_ivf_recall_eval", "text_langid_confusion", "mm_chunk_sample",
-    "text_simpson_diversity", "dq_benford_digits",
-    "orders_rfm_segmentation", "cohort_ltv_curve",
-    "attribution_last_touch", "markov_event_transitions", "ohlc_daily",
-    "survival_kaplan_meier", "forecast_seasonal_backtest",
-    "trend_theil_sen", "forecast_holt_linear",
-    "attribution_position_based", "dq_referential_orphans",
-    "abc_pareto_parts", "growth_accounting_weekly", "recsys_item_cosine",
-    "seqpat_followed_by", "ols_elasticity_by_type",
-    "ts_interarrival_stats", "session_depth_stats",
-    "market_concentration_hhi", "returns_rate_by_brand",
-    "audience_overlap_jaccard", "revenue_new_vs_repeat", "ts_acf_daily",
-    "ts_seasonal_decompose", "orders_backlog_aging", "dq_psi_drift",
-]
-
-# 3 oldest r6-evidence names (registry order) to fill the window to
-# exactly 50 (a fourth fill slot went to the sim_pq_probe_compacted
-# registration; the remaining 12 r6 names lead r13).
-_R12_R6_FILL: list[str] = [
-    "ts_gapfill_locf", "w9_percent_rank_cume", "w12_streak_reset_count",
-]
-
-_R11_RECERT: list[str] = [
-    "curate_nightly_ingest",              # refactor + templated oracle
-    "dedup_minhash_incremental_indexed",  # shared-writer refactor
-    "sim_pq_probe",                       # restore-time sidecar guard
-    "sim_ivfpq_probe",                    # restore-time sidecar guard
-]
-
-_R11_NEW: list[str] = [
-    "curate_nightly_ingest_day2",  # certified index MAINTENANCE
-        # (VERDICT r10 item 1): day-1 keeps merged into the persisted
-        # gram/MinHash/IVF indexes via the append-only merge_into_*
-        # functions; day-2 batch probes the MERGED state; oracle = the
-        # from-scratch replay over corpus ∪ day-1 keeps (the nightly
-        # template instantiated twice in one flat WITH list)
-]
-
-# The full r4-evidence cohort (40 names, registry order): zero code
-# changes, fresh driver rows continue the oldest-first freshness
-# rotation — after this window the evidence floor moves from r4 to r5
-# (VERDICT r10 item 2).
-_R11_STALE_REFRESH: list[str] = [
-    "j_bloom_semi_join", "a_string_agg", "a_percentiles_approx",
-    "w6_rolling_median", "w7_running_distinct", "w8_ewma",
-    "layout_zorder_key", "skyline_orders", "dedup_jaccard_prefix",
-    "dedup_clusters_bigstar", "graph_triangles", "graph_pagerank",
-    "dedup_dupngram_fraction", "er_canonical_records",
-    "emb_centroid_by_label", "emb_project_jl", "text_tfidf_top_terms",
-    "text_bm25_search", "curate_pipeline_staged", "mm_audio_features",
-    "text_bpe_train", "dq_expectations", "percentiles_daily_approx",
-    "sample_weighted_ares", "hist_equidepth", "dau_wau_rolling",
-    "profile_corr_matrix", "profile_spearman_corr", "scd2_point_in_time",
-    "orders_open_concurrency", "basket_association_rules",
-    "a_distinct_weekly", "anomaly_seasonal_zscore", "chi2_independence",
-    "mutual_information", "weighted_percentiles",
-    "order_lifecycle_snapshot", "ks_two_sample", "cusum_changepoint",
-    "heavy_hitters",
-]
-
-# 5 oldest r5-evidence names (registry order) to fill the window to
-# exactly 50.
-_R11_R5_FILL: list[str] = [
-    "json_props_extract", "f_datetime_suite", "w6_rolling_median_prod",
-    "w10_rolling_corr", "w11_range_interval",
-]
-
-_R10_RECERT: list[str] = [
-    "dedup_substring_incremental",  # r8 row predates the write-once fix
-                                    # (VERDICT r9 item 2); also refactored
-                                    # onto ensure_gram_index this round —
-                                    # output-identical, locally re-verified
-    "dedup_minhash_incremental_indexed",  # refactored onto
-                                          # ensure_minhash_index (shared
-                                          # with curate_nightly_ingest) —
-                                          # output-identical, re-verified
-]
-
-_R10_NEW: list[str] = [
-    "sim_pq_probe",      # PQ persisted-index probe (VERDICT r9 item 3):
-                         # ADC over the RESTORED codes relation +
-                         # codebook sidecar; shares sim_pq_adc_topk's
-                         # exact oracle
-    "sim_ivfpq_probe",   # composed IVF-PQ persisted index: partition-
-                         # pruned cells of the partitionBy(cluster) codes
-                         # relation; shares sim_ivfpq_topk's exact oracle
-    "curate_nightly_ingest",  # the composed nightly flagship (item 6):
-                              # batch through ALL THREE persisted indexes
-                              # (grams -> MinHash bands -> IVF cells) to a
-                              # per-document disposition; oracle chains
-                              # the three certified from-scratch replays
-]
-
-# The full r3-evidence cohort (39 names): zero code changes, fresh
-# driver rows continue the oldest-first freshness rotation — after this
-# window the evidence floor moves from r3 to r4 (VERDICT r9 item 2).
-_R10_STALE_REFRESH: list[str] = [
-    "a1_sliding_window_agg", "a4_minmax_scalar", "a6_daily_rollup",
-    "a7_column_stats", "a8_distinct_values", "ab_test_zstat",
-    "agg_rollup_hierarchy", "anomaly_zscore", "asof_join_forward",
-    "cdc_merge_upsert", "cdc_scd2_dim", "cdc_snapshot_diff",
-    "curate_decontaminate", "curate_pipeline_end2end",
-    "dedup_incremental_batch", "funnel_conversion", "funnel_windowed",
-    "hist_equiwidth", "mm_byte_histogram", "percentiles_daily",
-    "profile_columns", "retention_cohorts", "robust_stats_by_group",
-    "sample_mixture_weighted", "session_paths", "session_windows",
-    "shard_train_split", "streaming_dedup", "streaming_late_drop",
-    "streaming_static_enrich", "text_chunk_overlap", "text_normalize",
-    "text_pii_redact", "text_quality_gopher", "text_top_ngrams",
-    "tpch_q9_product_profit", "trend_slope_daily", "twa_daily",
-    "w5_ntile_dist",
-]
-
-# 6 r4-evidence names to fill the window to exactly 50: the two PQ
-# twins first (their oracles are now shared with the new probes, so
-# fresh rows double-certify the split), then registry order.
-_R10_R4_REFRESH: list[str] = [
-    "sim_pq_adc_topk", "sim_ivfpq_topk", "streaming_session_windows",
-    "streaming_stream_join_outer", "o4_topk_per_group",
-    "join_salted_skew",
-]
-
-_R9_NEW: list[str] = [
-    "sim_ivf_build",   # registered bench phase split: deterministic
-                       # fixed-quantizer full-corpus assignment, exact
-                       # oracle (VERDICT r8 item 4)
-    "sim_ivf_probe",   # probe against the PERSISTED partitionBy(cluster)
-                       # index; shares sim_ivf_topk's exact oracle —
-                       # certifies materialize->restore->probe ==
-                       # from-scratch (item 4)
-    "dedup_minhash_incremental_indexed",  # persisted corpus-side MinHash
-                       # band-bucket + shingle index (write_minhash_index)
-                       # probed by the nightly batch; shares
-                       # dedup_incremental_batch's from-scratch oracle
-                       # (item 6)
-]
-
-# Code/oracle changed this round — dtype-width BIGINT casts (the
-# text_langid/mm_binary_meta class, VERDICT r8 "what's wrong" 1, closed
-# registry-wide by tests/test_registry.py::test_integer_width_matches_
-# oracle) and the one-shot-inline centroid assignment (item 3). All
-# locally re-verified exact at sf0.01+sf0.1 before commit.
-_R9_RECERT: list[str] = [
-    "text_langid",          # hits_* INT -> BIGINT
-    "mm_binary_meta",       # meta.n_bytes INT -> BIGINT
-    "text_stats",           # n_chars/n_words/n_distinct/alpha INT -> BIGINT
-    "text_token_count",     # all three counts INT -> BIGINT
-    "f_array_ops",          # dim INT -> BIGINT
-    "f_array_unnest_stats", # dim_idx (posexplode pos) INT -> BIGINT
-    "sim_knn_allpairs",     # rank INT -> BIGINT
-    "dedup_fuzzy_levenshtein",  # edit_distance INT -> BIGINT
-    "a1_pipeline_long",     # oracle-side: signal_id VALUES dim cast BIGINT
-    "sim_ivf_topk",         # build_ivf_index_fixed now uses the inlined
-                            # codegen assignment form (bit-identical)
-    # dedup_substring_incremental's write-once fix (ADVICE r8) changes no
-    # output byte (re-verified exact at sf0.01 + sf0.1 locally) and its
-    # newest driver row is r8 — it stays OUT of the 50-slot window so the
-    # six rows-only twins all fit (the window is exactly 50 with it out).
-]
-
-# The rest of the r1/r2-evidence cohort (39 names minus the 8 moved into
-# _R9_RECERT by the width casts): zero code changes, fresh driver rows
-# retire the backlog — after this window no registered query's newest
-# evidence predates the r3 oracle hardening.
-_R9_STALE_REFRESH: list[str] = [
-    "dedup_clusters", "dedup_exact", "dedup_exact_rows",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-    "f_json_extract", "f_scalar_suite", "j1_broadcast_dim_join",
-    "j_null_safe_join", "s1_scan_project_filter", "sample_bernoulli",
-    "sample_stratified", "sample_train_test_split",
-    "set_ops_user_segments", "sql_facade_text_query",
-    "streaming_window_agg", "text_fingerprint",
-    "tpcds_q27_rollup_avgs", "tpcds_q36_margin_rank",
-    "tpcds_q3_brand_by_year", "tpcds_q67_topk_rollup",
-    "tpch_q11_important_stock", "tpch_q12_priority_by_status",
-    "tpch_q16_supplier_part_count", "tpch_q1_pricing_summary",
-    "tpch_q20_promotable_suppliers", "tpch_q22_dormant_customers",
-    "tpch_q2_min_cost_supplier", "ts_gap_fill", "w4_trailing_range_frame",
-]
-
-# The six rows-only structural twins (VERDICT r8 item 5): fresh r9 rows
-# so the rows-only six stay auditable; each docstring points at its
-# exact-oracled twin.
-_R9_TWIN_RECERT: list[str] = [
-    "dedup_minhash_lsh_prod", "dedup_simhash_prod", "sim_ivf_topk_prod",
-    "shard_train_split_prod", "a_distinct_rollup_hll", "emb_project_pca",
-]
-
-_R8_NEW: list[str] = [
-    "mm_image_dhash_wide",  # 256-bit grid-16 dHash, 8 lossless 32-bit
-                            # bands, salted occupancy cap, perturbed
-                            # mirror injection (VERDICT r7 item 4)
-    "dedup_substring_incremental",  # persisted-gram-index nightly
-                                    # probe == from-scratch (item 6)
-    "text_quality_classifier",  # broadcast linear quality model over
-                                # Gopher weak labels, integer micro-unit
-                                # weights (item 7)
-    "dedup_top_duplicate_spans",  # Lee et al. §5 most-repeated-span
-                                  # diagnostic: gram agg + top-k, no sort
-    "emb_mutual_knn_clusters",  # mutual-kNN semantic grouping: BLAS kNN
-                                # -> mutual filter -> union-find closure
-    "curate_dsir_resample",  # DSIR hashed-ngram importance resampling
-                             # (Xie et al. '23), micro-unit λ weights
-    "mm_audio_vad",  # integer energy-gate VAD segments over real WAV
-                     # decode; pure ANSI-SQL islands oracle
-    "emb_kmeans_train",  # full 3-iteration Lloyd loop, broadcast
-                         # centroids, inductively exact pinned means
-    "curate_semantic_decontaminate",  # embedding-tier eval leakage
-                                      # screen: broadcast eval set,
-                                      # corpus-streaming BLAS top-1
-]
-
-# Plan changes with locally re-certified bit-identical outputs (the
-# semdedup BLAS-verify/union-find rewrite and the md5-keyed document
-# dedup in the substr pipeline — VERDICT r7 items 1 and 3); their newest
-# driver rows predate the rewrite, so they take window slots right after
-# the new registrations.
-_R8_RECERT: list[str] = [
-    "dedup_semdedup_survivors",  # Arrow-batched BLAS verify + auto
-                                 # union-find closure (VERDICT r7 item 1;
-                                 # 21.9 s -> ~1.8 s warm at sf0.1)
-    "dedup_embedding_lsh",       # same verify-path change (shared
-                                 # embedding_near_dup_pairs_lsh)
-    "curate_pipeline_substr",    # document dedup now groups on
-                                 # md5(text) (argmin struct) instead of
-                                 # Window.partitionBy(text) — no
-                                 # full-body shuffle keys (item 3)
-]
-
-# Evidence-freshness backlog (VERDICT r7 item 2 / missing item 1): the
-# 77 queries whose newest driver row is from r1 or r2 — before the r3
-# dtype-audited oracle hardening. Zero code changes; tools/check_oracle
-# re-certifies all of them locally each round. Ordered oldest-evidence
-# first (the 33 r1-newest names, then the 44 r2-newest names); whatever
-# misses the ~50-slot r8 window leads r9.
-_R8_STALE_REFRESH = [
-    # newest evidence = r1
-    "a_distinct_count", "a_percentiles", "agg_cube", "agg_grouping_sets",
-    "agg_salted_skew", "hypertable_rollup", "j2_anti_join",
-    "j3_fact_dim_join", "j4_left_join_stats", "j5_outer_window_align",
-    "o2_topk", "r1_unpivot", "r4_pivot", "range_join_intervals",
-    "streaming_stateful_totals", "streaming_stream_join",
-    "tpch_q10_returned_items", "tpch_q13_cust_order_dist",
-    "tpch_q14_promo_effect", "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue", "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_revenue", "tpch_q21_waiting_suppliers",
-    "tpch_q3_shipping_priority", "tpch_q4_order_priority",
-    "tpch_q5_local_supplier", "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping", "tpch_q8_market_share",
-    "w1_latest_per_key", "w2_lag_delta", "w3_running_sum",
-    # newest evidence = r2
-    "a1_pipeline_long", "a1_tumbling_window_agg", "a5_group_multi_agg",
-    "a_approx_distinct", "asof_join_events", "dedup_clusters",
-    "dedup_exact", "dedup_exact_rows", "dedup_fuzzy_levenshtein",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-    "f_array_ops", "f_array_unnest_stats", "f_json_extract",
-    "f_scalar_suite", "j1_broadcast_dim_join", "j_null_safe_join",
-    "mm_binary_meta", "s1_scan_project_filter", "sample_bernoulli",
-    "sample_stratified", "sample_train_test_split",
-    "set_ops_user_segments", "sim_knn_allpairs", "sql_facade_text_query",
-    "streaming_window_agg", "text_fingerprint", "text_langid",
-    "text_stats", "text_token_count", "tpcds_q27_rollup_avgs",
-    "tpcds_q36_margin_rank", "tpcds_q3_brand_by_year",
-    "tpcds_q67_topk_rollup", "tpch_q11_important_stock",
-    "tpch_q12_priority_by_status", "tpch_q16_supplier_part_count",
-    "tpch_q1_pricing_summary", "tpch_q20_promotable_suppliers",
-    "tpch_q22_dormant_customers", "tpch_q2_min_cost_supplier",
-    "ts_gap_fill", "w4_trailing_range_frame",
-]
-
-# --- provenance: the r7 window (all entries below carry hash-green r7
-# driver rows; kept for the rotation tail order). ---
-_R7_NEW = [
-    "dedup_exact_substring",   # repeated >=5-token span REMOVAL (item 1)
-    "mm_image_dhash_dedup",    # perceptual dHash near-dup pairs (item 2)
-    "mm_audio_spectrogram",    # upgraded rows-only -> EXACT generated
-                               # VALUES oracle (item 3)
-    "curate_pipeline_substr",  # corpus build exercising span removal
-                               # end-to-end (item 7)
-    "dedup_url_manifest",      # manifest-level URL dedup before decode
-                               # (item 7)
-    "dedup_minhash_est_error", # sketch-vs-true Jaccard estimator audit
-    "mm_video_scene_cuts",     # SAD shot-boundary metric, shuffle-free
-    "curate_decontaminate_spans",  # span-level eval decontamination
-    "text_bpe_encode_corpus",  # per-doc MODEL-token counts under the
-                               # trained BPE, exact 20-round oracle
-    "text_blocklist_screen",   # C4/UT1-style term-density filter
-    "dedup_semdedup_survivors",  # semantic dedup end-to-end: LSH ->
-                                 # closure -> survivor delete-list
-    "sample_domain_cap",       # FineWeb-style per-domain doc cap,
-                               # hash-ordered survivors
-    "curate_boilerplate_strip",  # RefinedWeb-style cross-doc-frequency
-                                 # segment removal
-    "curate_ppl_buckets",      # CCNet head/middle/tail LM-score
-                               # terciles via distributed NTILE
-    "text_fertility_by_lang",  # BPE tokens-per-word by language,
-                               # bit-exact 20-round trained oracle
-    "curate_contamination_report",  # per-EVAL-doc contamination view
-                                    # (dual of curate_decontaminate)
-    "sample_domain_temperature",  # n^0.5 temperature domain allocation,
-                                  # sqrt correctly-rounded cross-engine
-    "dedup_rate_by_source",    # per-domain dup participation/removal
-                               # rates on an injected mirror source
-]
-
-# Post-rewrite re-certs queued during r7 (plan changes with
-# bit-identical outputs whose newest driver rows predate the rewrite).
-_R7_RECERT: list[str] = []
-
-# --- provenance: the r6 driver window (all entries below have hash-green
-# r6 driver rows; kept for the rotation tail order). r6 shipped no new
-# queries — the spectrogram exact-oracle upgrade and the two new dedup
-# operators announced for r6 actually landed in r7 (see _R7_NEW).
-_R6_NEVER_CHECKED = [
-    "asof_join_nearest",
-    "asof_join_tolerance",
-    "curate_quality_gate_sweep",
-    "dedup_cluster_keep_policy",
-    "dedup_threshold_sweep",
-    "dq_null_rate_daily",
-    "dq_uniqueness_profile",
-    "emb_cosine_hist_sampled",
-    "emb_kmeans_step",
-    "emb_norm_profile",
-    "events_fano_hourly",
-    "funnel_negative_condition",
-    "funnel_time_to_convert",
-    "graph_degree_distribution",
-    "ivm_agg_merge",
-    "layout_hilbert_key",
-    "mm_audio_spectrogram",  # rows-only in r6; exact oracle landed in r7
-    "mm_magic_profile",
-    "mm_patch_grid",
-    "orders_median_gap_days",
-    "orders_ship_latency_percentiles",
-    "promo_uplift_did",
-    "revenue_waterfall",
-    "risk_var_es_daily",
-    "sample_systematic",
-    "shard_balance_report",
-    "sim_matryoshka_recall_eval",
-    "stats_bootstrap_ci_mean",
-    "streaks_gaps_islands",
-    "streaming_hopping_window_agg",
-    "text_novelty_fraction",
-    "text_readability",
-    "text_zipf_fit",
-    "user_event_entropy",
-    "w12_streak_reset_count",
-]
-
-# Post-window rewrites queued from r5 (VERDICT items 1, 8): the newest
-# driver row for each predates a plan/representation change that is
-# bit-identical by local re-certification; give them fresh rows.
-_R6_RECERT = [
-    "emb_anova_f_topdims",  # decimal-pinned between-group terms (item 8)
-    "sim_ivf_topk",
-    "sim_knn_bruteforce",
-    "sim_lsh_bucketed",
-    "emb_scalar_quantize",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "sample_token_budget",
-    "pack_sequences_ctx",
-    "ts_gapfill_locf",
-    "text_lm_bigram_score",
-]
-
-_R5_FIXED_RED = [
-    "text_inverted_index",  # doc_gaps/tfs arrays -> string signatures
-    "emb_standardize",      # z array -> z_ppm micro-unit string signature
-]
-
-# Entries 51+ of the r4 registration order: registered and locally
-# certified exact in r4, but never driver-checked. ADVICE-r4 behavior
-# fixes landed this round for: emb_anova_f_topdims (decimal-pinned
-# between-group terms), forecast_holt_linear (short-series guard +
-# gap-aware indexing), mm_chunk_sample (empty-payload clamp),
-# text_collocations_pmi (single-runtime ln).
-_R5_NEVER_CHECKED = [
-    "w9_percent_rank_cume",
-    "text_collocations_pmi",
-    "sample_neyman_allocation",
-    "mm_chunk_sample",
-    "w10_rolling_corr",
-    "dq_benford_digits",
-    "orders_rfm_segmentation",
-    "cohort_ltv_curve",
-    "attribution_last_touch",
-    "markov_event_transitions",
-    "json_props_extract",
-    "ohlc_daily",
-    "er_fuzzy_blocked",
-    "survival_kaplan_meier",
-    "forecast_seasonal_backtest",
-    "trend_theil_sen",
-    "forecast_holt_linear",
-    "attribution_position_based",
-    "sample_class_balance",
-    "dq_referential_orphans",
-    "abc_pareto_parts",
-    "emb_silhouette_centroid",
-    "dedup_containment",
-    "w11_range_interval",
-    "growth_accounting_weekly",
-    "text_langid_confusion",
-    "recsys_item_cosine",
-    "seqpat_followed_by",
-    "o5_keyset_pagination",
-    "ols_elasticity_by_type",
-    "emb_anova_f_topdims",
-    "dedup_lsh_recall_eval",
-    "text_simpson_diversity",
-    "sim_ivf_recall_eval",
-    "f_datetime_suite",
-    "ts_interarrival_stats",
-    "session_depth_stats",
-    "market_concentration_hhi",
-    "returns_rate_by_brand",
-    "audience_overlap_jaccard",
-    "revenue_new_vs_repeat",
-    "a_distinct_rollup_hll",
-    "emb_project_pca",
-]
-
-# Genuinely-new r5 registrations (filled as the round progresses); any
-# overflow past the ~50-slot window is locally certified and leads r6.
-_R5_NEW = [
-    "w6_rolling_median_prod",  # exact halo-block twin (VERDICT item 4)
-    "ts_acf_daily",            # new: ACF lags 1-7, pinned cross terms
-    "ts_seasonal_decompose",   # new: MA trend + dow seasonal + remainder
-    "orders_backlog_aging",    # new: open-order aging buckets at as-of
-    "dq_psi_drift",            # new: PSI drift screen, pinned-libm ln
-    "text_readability",        # new: Flesch/FK scores, shuffle-free scan
-    "sample_systematic",       # new: every-kth via distributed rank
-    "layout_hilbert_key",      # new: Hilbert curve key, exact bit math
-    "emb_kmeans_step",         # new: one exact Lloyd iteration
-    "streaks_gaps_islands",    # new: consecutive-day activity runs
-    "graph_degree_distribution",  # new: near-dup graph shape histogram
-    "promo_uplift_did",        # new: diff-in-diff uplift, 4-cell reduce
-    "text_zipf_fit",           # new: rank-frequency OLS, pinned-libm ln
-    "mm_magic_profile",        # new: magic-byte format dispatch profile
-    "dedup_cluster_keep_policy",  # new: survivor selection over closure
-    "risk_var_es_daily",       # new: rank-pinned VaR + expected shortfall
-    "asof_join_tolerance",     # new: staleness-bounded as-of (merge_asof)
-    "user_event_entropy",      # new: behavioral-mix entropy, pinned terms
-    "revenue_waterfall",       # new: cent-exact finance reconciliation
-    "events_fano_hourly",      # new: burstiness via integer moments
-    "w12_streak_reset_count",  # new: reset-on-condition running count
-    "text_novelty_fraction",   # new: first-occurrence shingle novelty
-    "dq_uniqueness_profile",   # new: column dominance/uniqueness screen
-    "orders_median_gap_days",  # new: rank-pinned per-customer cadence
-    "streaming_hopping_window_agg",  # new: sliding windows, stream parity
-    "ivm_agg_merge",           # new: base+delta partial-agg merge == full
-    "funnel_negative_condition",  # new: A->B with no C between, linear
-    "stats_bootstrap_ci_mean",  # new: integer-ladder Poisson bootstrap CI
-    "orders_ship_latency_percentiles",  # new: rank-pinned SLA report
-    "emb_norm_profile",        # new: per-label L2-norm sanity gate
-    "shard_balance_report",    # new: training-shard skew audit
-    "curate_quality_gate_sweep",  # new: threshold retention curve
-    "asof_join_nearest",       # new: merge_asof nearest, tie->backward
-    "dq_null_rate_daily",      # new: per-day per-column null drift
-    "emb_cosine_hist_sampled",  # new: embedding-geometry health check
-    "funnel_time_to_convert",  # new: daily conversion-delay percentiles
-    "sim_matryoshka_recall_eval",  # new: truncated-dim recall vs truth
-    "mm_audio_spectrogram",    # new: real STFT bands, Parseval-certified
-    "mm_patch_grid",           # new: ViT patch fan-out, exact tile means
-    "dedup_threshold_sweep",   # new: cosine-cutoff pair-count curve
-]
-
-# r4 perf-rewrite queries that kept r1-r3 rows (VERDICT item 6): ANN
-# vector-literal family + persist-inserted subtrees. Bit-identical
-# outputs, locally re-certified; they take slots after the queues above.
-_R5_RECERT = [
-    "sim_ivf_topk",
-    "sim_knn_bruteforce",
-    "sim_lsh_bucketed",
-    "emb_scalar_quantize",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "sample_token_budget",
-    "pack_sequences_ctx",
-    "ts_gapfill_locf",
-    "text_lm_bigram_score",
-]
-
-# Retained for provenance: the r4 window order (first 50 got r4 rows).
-_R4_CHANGED_FIRST = [
-    "curate_pipeline_staged",   # new: materialized-boundary corpus build
-    "sample_weighted_ares",     # round_half_up contract fix (ADVICE r3)
-    "dq_expectations",          # expectations stack() hardening (ADVICE r3)
-    "a_percentiles_approx",     # new: mergeable sketch + rank-bound claim
-    "percentiles_daily_approx", # new: daily sketch twin
-    "text_tfidf_top_terms",     # new: corpus TF-IDF keyword extraction
-    "hist_equidepth",           # new: decile histogram, no global sort
-    "w6_rolling_median",        # new: bounded-frame window percentile
-    "join_salted_skew",         # new: salted join, plain-join oracle
-    "dau_wau_rolling",          # new: DAU/WAU via contribution explode
-    "text_bm25_search",         # new: BM25 lexical retrieval top-k
-    "dedup_clusters_bigstar",   # new: large-star/small-star CC, same oracle
-    "profile_corr_matrix",      # new: one-pass exact pairwise Pearson corr
-    "mm_audio_features",        # new: real WAV PCM encode→decode roundtrip
-    "layout_zorder_key",        # new: Morton interleave, exact bit-math oracle
-    "text_lm_bigram_score",     # new: self-trained char-bigram LM quality gate
-    "w7_running_distinct",      # new: distinct-count window via two-window rewrite
-    "emb_centroid_by_label",    # new: per-class centroid, per-dim partial sums
-    "streaming_session_windows",  # new: stream/batch session parity, same oracle
-    "sim_pq_adc_topk",          # new: product quantization ADC, exact oracle
-    "sim_ivfpq_topk",           # new: composed IVF-PQ, end-to-end exact oracle
-    "profile_spearman_corr",    # new: rank corr, broadcast rank tables
-    "graph_pagerank",           # new: damped power iteration, unrolled oracle
-    "scd2_point_in_time",       # new: PIT join executed as as-of, range oracle
-    "orders_open_concurrency",  # new: sweep-line cumsum over aggregated deltas
-    "basket_association_rules", # new: support/confidence/lift co-occurrence
-    "a_distinct_weekly",        # new: exact twin for the HLL rollup
-    "anomaly_seasonal_zscore",  # new: hour-of-day deseasonalized outliers
-    "chi2_independence",        # new: contingency chi2, exact decimal terms
-    "text_bpe_train",           # new: real BPE training, 20-round unrolled oracle
-    "streaming_stream_join_outer",  # new: outer join, watermark-cutoff oracle
-    "emb_project_jl",           # new: JL random projection, exact md5-sign oracle
-    "weighted_percentiles",     # new: token-weighted nearest-rank quantiles
-    "order_lifecycle_snapshot", # new: accumulating-snapshot fact, exact day lags
-    "ts_gapfill_locf",          # new: time_bucket_gapfill with LOCF + linear interp
-    "text_inverted_index",      # new: blocked delta-encoded posting lists
-    "emb_standardize",          # new: per-dim z-score, flat decimal-sum pass
-    "graph_triangles",          # new: degree-ordered oriented triangle count
-    "o4_topk_per_group",        # new: grouped top-k over aggregated revenue
-    "dedup_jaccard_prefix",     # new: lossless PPJoin prefix filtering
-    "skyline_orders",           # new: Pareto frontier, two-phase prefix min
-    "mutual_information",       # new: contingency MI, exact decimal terms
-    "j_bloom_semi_join",        # new: bloom-bitmap pre-filtered semi-join
-    "dedup_dupngram_fraction",  # new: duplicated-span fraction (substring tier)
-    "er_canonical_records",     # new: ER survivorship over the CC closure
-    "ks_two_sample",            # new: KS drift stat via parallel prefix sums
-    "w8_ewma",                  # new: bounded EWMA, decimal-term frame fold
-    "cusum_changepoint",        # new: CUSUM drift detector over daily means
-    "heavy_hitters",            # new: exact support mining + freqItems twin
-    "a_string_agg",             # new: ordered LISTAGG via sort-normalized collect
-    "w9_percent_rank_cume",     # new: relative-standing window pair
-    "text_collocations_pmi",    # new: PMI multiword-expression mining
-    "sample_neyman_allocation", # new: variance-optimal stratified budget
-    "mm_chunk_sample",          # new: strided binary chunk/frame sampling
-    "w10_rolling_corr",         # new: trailing 14-day co-movement corr
-    "dq_benford_digits",        # new: Benford first-digit drift screen
-    "orders_rfm_segmentation",  # new: RFM quintile customer segments
-    "cohort_ltv_curve",         # new: cumulative revenue by cohort age
-    "attribution_last_touch",   # new: as-of credit via running last-non-null
-    "markov_event_transitions", # new: journey dynamics, |types|^2 table
-    "json_props_extract",       # new: schema-on-read JSON extraction
-    "ohlc_daily",               # new: OHLC resample via min_by/max_by
-    "er_fuzzy_blocked",         # new: lossless pigeonhole fuzzy join
-    "survival_kaplan_meier",    # new: KM life table, pinned-order fold
-    "forecast_seasonal_backtest",  # new: holdout MAE/bias, micro-unit errors
-    "trend_theil_sen",          # new: robust pairwise-slope median trend
-    "forecast_holt_linear",     # new: recursive smoothing, CTE-pinned fold
-    "attribution_position_based",  # new: U-shaped credits in exact ppm
-    "sample_class_balance",     # new: exact per-class quota downsample
-    "dq_referential_orphans",   # new: FK-edge orphan audit via anti joins
-    "abc_pareto_parts",         # new: Pareto tiers via two-phase prefix scan
-    "emb_silhouette_centroid",  # new: clustering quality, decimal-term dists
-    "dedup_containment",        # new: asymmetric sub-document containment
-    "w11_range_interval",       # new: time-RANGE frame, tiebreak-free
-    "growth_accounting_weekly", # new: new/retained/resurrected/churned
-    "text_langid_confusion",    # new: eval confusion matrix vs labels
-    "recsys_item_cosine",       # new: item-item CF top-k, basket-bounded
-    "seqpat_followed_by",       # new: a-before-b support via type summaries
-    "o5_keyset_pagination",     # new: seek-method pages, pushable anchor
-    "ols_elasticity_by_type",   # new: cross-join regression, all-int stats
-    "emb_anova_f_topdims",      # new: ANOVA F feature ranking per dim
-    "dedup_lsh_recall_eval",    # new: banding recall vs exact truth
-    "text_simpson_diversity",   # new: integer-exact repetitiveness signal
-    "sim_ivf_recall_eval",      # new: ANN recall@10 vs exact truth
-    "f_datetime_suite",         # new: calendar scalars, ISO-normalized dow
-    "ts_interarrival_stats",    # new: gap process moments, decimal sq-sums
-    "session_depth_stats",      # new: bounce/depth/duration scorecard
-    "market_concentration_hhi", # new: HHI via pico-unit share squares
-    "returns_rate_by_brand",    # new: conditional-agg merch screen
-    "audience_overlap_jaccard", # new: all-pairs segment overlap matrix
-    "revenue_new_vs_repeat",    # new: acquisition/retention revenue mix
-    # --- beyond here: plan-representation changes with BIT-IDENTICAL
-    # outputs (SQL-parsed literals / persist reuse), each re-certified
-    # exact by tools/check_oracle.py this round; they take any window
-    # slots left after the genuinely-new rows above ---
-    "sim_ivf_topk",             # _lit_vec literals (bit-identical plan consts)
-    "sim_knn_bruteforce",       # _lit_vec literals
-    "sim_lsh_bucketed",         # _lit_vec literals
-    "emb_scalar_quantize",      # _lit_vec literals
-    "dedup_embedding_cosine",   # _lit_vec literals
-    "dedup_embedding_lsh",      # _lit_vec literals
-    "sample_token_budget",      # prefix-sum persist hardening
-    "pack_sequences_ctx",       # prefix-sum persist hardening
-    "a_distinct_rollup_hll",    # new: mergeable sketches, rows-only + bound test
-    "emb_project_pca",          # new: trained twin, rows-only + property tests
-]
-
-# Names whose only hash-green row is from CORRECTNESS_r01.json (round 2
-# spent its window on the then-unproven families); rotate them through the
-# round-3 window so every query has a green row under the dtype-audited
-# oracle set.
-_R1_ONLY_GREEN = {
-    "a1_sliding_window_agg", "a4_minmax_scalar", "a6_daily_rollup",
-    "a7_column_stats", "a8_distinct_values", "a_distinct_count",
-    "a_percentiles", "agg_cube", "agg_grouping_sets", "agg_rollup_hierarchy",
-    "agg_salted_skew", "hypertable_rollup", "j2_anti_join",
-    "j3_fact_dim_join", "j4_left_join_stats", "j5_outer_window_align",
-    "o2_topk", "r1_unpivot", "r4_pivot", "range_join_intervals",
-    "session_windows", "streaming_stateful_totals", "streaming_stream_join",
-    "tpch_q10_returned_items", "tpch_q13_cust_order_dist",
-    "tpch_q14_promo_effect", "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue", "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_revenue", "tpch_q21_waiting_suppliers",
-    "tpch_q3_shipping_priority", "tpch_q4_order_priority",
-    "tpch_q5_local_supplier", "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping", "tpch_q8_market_share",
-    "w1_latest_per_key", "w2_lag_delta", "w3_running_sum",
-}
-
-# Re-verify a few green flagships each round (one per operator family).
-_KEEP_GREEN_FIRST = [
-    "s1_scan_project_filter", "a1_tumbling_window_agg",
-    "tpch_q1_pricing_summary", "j1_broadcast_dim_join",
-    "streaming_window_agg",
-]
+_REPO = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+_RECORD = re.compile(r"CORRECTNESS_r(\d+)\.json$")
 
 
-# r1-only names the round-3 window already re-certified (tail of the 50):
-# drop them from the stale rotation so round 4's window reaches the rest.
-_RECERTIFIED_R3 = {
-    "a1_sliding_window_agg", "a4_minmax_scalar", "a6_daily_rollup",
-    "a7_column_stats", "a8_distinct_values", "agg_rollup_hierarchy",
-    "session_windows",
-}
+def _records() -> dict[int, dict[str, dict]]:
+    """{round: {query name: result row}} from the repo's CORRECTNESS_r*.json;
+    empty when there are none (e.g. the package installed elsewhere)."""
+    records = {}
+    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        m = _RECORD.search(path)
+        if m:
+            with open(path) as f:
+                records[int(m.group(1))] = json.load(f)
+    return records
 
 
-def _driver_order() -> list[str]:
-    """Order queries() so the driver's ~50-query rotating correctness
-    window always covers (a) everything new or behavior-changed this
-    round (the _R16_* lists — the touched-path recerts of rounds 16 and
-    15 lead per VERDICT r15 item 8, then 24 oldest remaining r9 names =
-    exactly 50), then (b) every earlier round's window in reverse-round
-    order, then (c) one flagship per operator family, then the rest. As
-    of r6 every registration has a hash-green driver row, so the tail
-    order only controls evidence freshness."""
-    r16_front = _R16_RECERT + _R16_R9_FILL
-    missing = [n for n in r16_front if n not in QUERIES]
-    assert not missing, (
-        f"window names not registered: {missing} — a _R16_* entry must "
-        "land in the same commit as its @query registration"
+def window_order(
+    names: Iterable[str],
+    oracled: set[str],
+    records: Mapping[int, Mapping[str, Mapping]],
+) -> list[str]:
+    """Order names so the driver's front-of-registry correctness window
+    re-checks the stalest evidence first: oracled names whose newest
+    record row is not hash-green (or that were never checked), then
+    oracled names by the round of their newest hash-green row, oldest
+    first; names without an oracle last. Ties keep the input order.
+    Record names outside `names` are ignored. No records → input order."""
+    names = list(names)
+    if not records:
+        return names
+    newest: dict[str, tuple[int, bool]] = {}
+    for rnd in sorted(records):
+        for n, row in records[rnd].items():
+            newest[n] = (rnd, row.get("hash_match") is True)
+
+    def key(n: str) -> tuple[bool, int]:
+        rnd, green = newest.get(n, (-1, False))
+        return (n not in oracled, rnd if green else -1)
+
+    return sorted(names, key=key)
+
+
+def _order() -> list[str]:
+    return window_order(
+        QUERIES, set(ORACLE) | set(LAZY_ORACLE), _records()
     )
-    r15_front = (
-        _R15_R8_LEAD + _R15_RECERT + _R15_NEW + _R15_R9_FILL
-    )
-    r14_front = (
-        _R14_R7_LEAD + _R14_RECERT + _R14_NEW + _R14_R8_FILL
-    )
-    r13_front = (
-        _R13_RECERT + _R13_NEW + _R13_R6_REFRESH + _R13_R7_FILL
-    )
-    r12_front = (
-        _R12_RECERT + _R12_NEW + _R12_STALE_REFRESH + _R12_R6_FILL
-    )
-    r11_front = (
-        _R11_RECERT + _R11_NEW + _R11_STALE_REFRESH + _R11_R5_FILL
-    )
-    r10_front = (
-        _R10_RECERT + _R10_NEW + _R10_STALE_REFRESH + _R10_R4_REFRESH
-    )
-    r9_front = (
-        _R9_NEW + _R9_RECERT + _R9_STALE_REFRESH + _R9_TWIN_RECERT
-    )
-    r8_front = _R8_NEW + _R8_RECERT + _R8_STALE_REFRESH
-    front = list(dict.fromkeys(r16_front))
-    placed = set(front)
-    front += [n for n in r15_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [n for n in r14_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [n for n in r13_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [n for n in r12_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [n for n in r11_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [n for n in r10_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [n for n in r9_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [n for n in r8_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    r7_front = _R7_NEW + _R7_RECERT
-    r6_front = _R6_NEVER_CHECKED + _R6_RECERT
-    r5_front = (
-        _R5_FIXED_RED + _R5_NEVER_CHECKED + _R5_NEW + _R5_RECERT
-    )
-    front += [n for n in r7_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [n for n in r6_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [n for n in r5_front if n in QUERIES and n not in placed]
-    placed = set(front)
-    front += [
-        n for n in _R4_CHANGED_FIRST if n in QUERIES and n not in placed
-    ]
-    placed = set(front)
-    stale = [
-        n
-        for n in QUERIES
-        if n in _R1_ONLY_GREEN and n not in _RECERTIFIED_R3 and n not in placed
-    ]
-    placed.update(stale)
-    keep = [n for n in _KEEP_GREEN_FIRST if n in QUERIES and n not in placed]
-    placed.update(keep)
-    rest = [n for n in QUERIES if n not in placed]
-    return front + stale + keep + rest
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {n: QUERIES[n] for n in _driver_order()}
+    return {n: QUERIES[n] for n in _order()}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -1112,4 +114,4 @@ def oracle_sql() -> dict[str, str]:
     for n, thunk in list(LAZY_ORACLE.items()):
         if n not in ORACLE:
             ORACLE[n] = thunk()
-    return {n: ORACLE[n] for n in _driver_order() if n in ORACLE}
+    return {n: ORACLE[n] for n in _order() if n in ORACLE}

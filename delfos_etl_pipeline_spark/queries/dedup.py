@@ -537,9 +537,7 @@ def dedup_minhash_lsh_prod(spark, sf_dir):
     has its own correctness row. xxhash64 is not reproducible in DuckDB,
     so this is a rows-only check; the md5-keyed twin (dedup_minhash_lsh)
     proves the identical pipeline bit-exactly, and tests/test_dedup.py
-    pins both keyings to the same verified-Jaccard pair semantics.
-    Twin's newest exact driver row: r9 (dedup_minhash_lsh is in the same
-    _R9 window as this re-cert)."""
+    pins both keyings to the same verified-Jaccard pair semantics."""
     from delfos_etl_pipeline_spark.dedup.minhash import minhash_lsh_pairs
 
     docs = _t(spark, sf_dir, "documents")
@@ -550,9 +548,7 @@ def dedup_minhash_lsh_prod(spark, sf_dir):
 def dedup_simhash_prod(spark, sf_dir):
     """dedup_simhash's PRODUCTION keying (one xxhash64 per word vs 16 md5
     nibble extractions). Rows-only for the same reason as
-    dedup_minhash_lsh_prod; the md5-keyed twin carries the exact oracle.
-    Twin's newest exact driver row: r9 (dedup_simhash is in the same _R9
-    window as this re-cert)."""
+    dedup_minhash_lsh_prod; the md5-keyed twin carries the exact oracle."""
     from delfos_etl_pipeline_spark.dedup.simhash import simhash_pairs
 
     docs = _t(spark, sf_dir, "documents")

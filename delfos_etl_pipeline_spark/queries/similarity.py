@@ -198,8 +198,7 @@ def sim_ivf_topk_prod(spark, sf_dir):
     registered so the benched path has its own correctness row. K-means
     cell boundaries aren't reproducible in SQL, so rows-only; the probe
     plan (partition-pruned cells + exact cosine + top-k) is identical to
-    the exact-oracled sim_ivf_topk. Twin's newest exact driver row: r9
-    (sim_ivf_topk is in the same _R9 window as this re-cert)."""
+    the exact-oracled sim_ivf_topk."""
     from delfos_etl_pipeline_spark.similarity.ivf import build_ivf_index, ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")

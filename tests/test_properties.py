@@ -319,25 +319,3 @@ def test_wav_roundtrip_property(samples, rate):
     assert got_rate == rate
     assert out.shape == (len(samples), 1)
     assert (out[:, 0] == arr).all()
-
-
-def test_driver_front_window_names_all_registered():
-    """A typo in the verification-window ordering lists would silently
-    drop a query from the driver's ~50-query correctness window — every
-    listed name must exist in the registry."""
-    from delfos_etl_pipeline_spark.queries import (
-        _KEEP_GREEN_FIRST,
-        _R1_ONLY_GREEN,
-        _R4_CHANGED_FIRST,
-        _RECERTIFIED_R3,
-        QUERIES,
-    )
-
-    for group_name, names in {
-        "_R4_CHANGED_FIRST": _R4_CHANGED_FIRST,
-        "_R1_ONLY_GREEN": _R1_ONLY_GREEN,
-        "_RECERTIFIED_R3": _RECERTIFIED_R3,
-        "_KEEP_GREEN_FIRST": _KEEP_GREEN_FIRST,
-    }.items():
-        missing = [n for n in names if n not in QUERIES]
-        assert not missing, f"{group_name} references unknown queries: {missing}"

@@ -111,42 +111,34 @@ def test_oracle_keys_subset_of_queries():
     assert not missing, f"oracle_sql entries without a queries() twin: {missing}"
 
 
-def test_round_window_names_all_registered():
-    """Every _R12_*/_R11_*/_R10_*/_R9_*/_R8_* window entry must resolve
-    in QUERIES — a claimed-but-unshipped name fails here instead of
-    being silently dropped (ADVICE r6). _driver_order() also asserts
-    this at runtime."""
-    from delfos_etl_pipeline_spark import queries as qpkg
-
-    for n in (
-        qpkg._R15_R8_LEAD + qpkg._R15_RECERT + qpkg._R15_NEW
-        + qpkg._R15_R9_FILL
-        + qpkg._R14_R7_LEAD + qpkg._R14_RECERT + qpkg._R14_NEW
-        + qpkg._R14_R8_FILL
-        + qpkg._R13_RECERT + qpkg._R13_NEW + qpkg._R13_R6_REFRESH
-        + qpkg._R13_R7_FILL
-        + qpkg._R12_RECERT + qpkg._R12_NEW + qpkg._R12_STALE_REFRESH
-        + qpkg._R12_R6_FILL
-        + qpkg._R11_RECERT + qpkg._R11_NEW + qpkg._R11_STALE_REFRESH
-        + qpkg._R11_R5_FILL
-        + qpkg._R10_RECERT + qpkg._R10_NEW + qpkg._R10_STALE_REFRESH
-        + qpkg._R10_R4_REFRESH
-        + qpkg._R9_NEW + qpkg._R9_RECERT + qpkg._R9_STALE_REFRESH
-        + qpkg._R9_TWIN_RECERT
-        + qpkg._R8_NEW + qpkg._R8_RECERT + qpkg._R8_STALE_REFRESH
-        + qpkg._R7_NEW + qpkg._R7_RECERT
-    ):
-        assert n in qpkg.QUERIES, n
+def test_registry_invariants():
+    """Reordering into the correctness window never drops, duplicates or
+    adds a query, and the driver's ~50-query front window is spent only
+    on names that have an oracle."""
+    qs, oracles = list(Q.queries()), Q.oracle_sql()
+    assert len(qs) == len(set(qs))
+    assert set(qs) == set(Q.QUERIES)
+    assert set(oracles) == set(Q.ORACLE) | set(Q.LAZY_ORACLE)
+    no_oracle = [n for n in qs[:50] if n not in oracles]
+    assert not no_oracle, f"oracle-less names in the front window: {no_oracle}"
 
 
-def test_stale_refresh_no_duplicates():
-    """The r16 window is EXACTLY the driver's ~50-slot capacity — a
-    duplicate or an overflow silently pushes a claimed re-cert out."""
-    from delfos_etl_pipeline_spark import queries as qpkg
-
-    names = qpkg._R16_RECERT + qpkg._R16_R9_FILL
-    assert len(names) == len(set(names))
-    assert len(names) == 50, len(names)
+def test_window_order_from_records():
+    """Spark-free: red or never-checked oracled names first, then oldest
+    newest-green round, registry order on ties; oracle-less names last;
+    unregistered record names ignored; no records keeps registry order."""
+    green, red = {"hash_match": True}, {"hash_match": False}
+    names = ["nocheck", "g3", "g1", "noorc", "r2", "g1b", "flip"]
+    oracled = set(names) - {"noorc"}
+    records = {
+        1: {"g1": green, "g1b": green, "flip": green, "noorc": {}},
+        2: {"r2": red, "flip": red, "ghost": red},
+        3: {"g3": green, "ghost": green},
+    }
+    assert Q.window_order(names, oracled, records) == [
+        "nocheck", "r2", "flip", "g1", "g1b", "g3", "noorc",
+    ]
+    assert Q.window_order(names, oracled, {}) == names
 
 
 def test_bench_validate_record_stamped_at_head():
