@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from delfos_etl_pipeline_spark.session import local_frame
+
 
 def distributed_rank(
     df: DataFrame,
@@ -69,8 +71,10 @@ def distributed_rank(
         + [df.schema[c] for c in key_cols]
         + [T.StructField("_off", T.LongType())]
     )
-    off_df = df.sparkSession.createDataFrame(
-        [(pid, *k, off) for (pid, k), off in offsets.items()], off_schema
+    off_df = local_frame(
+        df.sparkSession,
+        [(pid, *k, off) for (pid, k), off in offsets.items()],
+        off_schema,
     )
     wloc = Window.partitionBy("_pid", *key_cols).orderBy(*order_cols)
     return (

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from delfos_etl_pipeline_spark.session import local_frame
+
 
 def skyline_min2(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """Rows of ``df`` on the (minimize x, minimize y) Pareto frontier."""
@@ -62,7 +64,8 @@ def skyline_min2(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
         if base is None or (tot is not None and tot < base):
             base = tot
     y_type = df.schema[y_col].dataType
-    off = spark.createDataFrame(
+    off = local_frame(
+        spark,
         offsets,
         StructType(
             [

@@ -30,6 +30,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from delfos_etl_pipeline_spark.session import local_frame
+
 #: Stats applied per measure — mean/min/max/sample-std, exactly the
 #: reference's resample aggregate set (/root/reference/etl/etl_process.py:90-94).
 #: Sample (ddof=1) stddev is load-bearing: SURVEY.md §2.10(2).
@@ -56,12 +58,14 @@ def default_signal_dim(
 ) -> DataFrame:
     """The signal dimension (S2): id/name/description, ids 1..N in the same
     deterministic order the reference seeds
-    (/root/reference/etl/prepare_alvo_db.py:56-66)."""
+    (reference etl/prepare_alvo_db.py:56-66). Built with
+    :func:`local_frame`, so the per-day broadcast of this lookup is a
+    JVM ``LocalTableScan``, never a Python-worker RDD scan."""
     rows = [
         (i + 1, name, f"aggregated signal {name}")
         for i, name in enumerate(signal_names(measures, stats))
     ]
-    return spark.createDataFrame(rows, "id long, name string, description string")
+    return local_frame(spark, rows, "id long, name string, description string")
 
 
 def extract_range(

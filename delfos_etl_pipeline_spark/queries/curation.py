@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from delfos_etl_pipeline_spark.queries._registry import _t, query
+from delfos_etl_pipeline_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Corpus curation — decontamination, budget sampling, packing, mixture
@@ -919,7 +920,7 @@ def curate_dsir_resample(spark, sf_dir):
         )
         for f, rc in rcs.items()
     ]
-    lamdf = spark.createDataFrame(lam, "f bigint, lam_u bigint")
+    lamdf = local_frame(spark, lam, "f bigint, lam_u bigint")
     return (
         feat.join(F.broadcast(lamdf), "f")
         .groupBy("doc_id", "lang")

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from delfos_etl_pipeline_spark.functions.stable import round_half_up
 from delfos_etl_pipeline_spark.queries._registry import _t, query
+from delfos_etl_pipeline_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Dedup — training-data-pipeline extensions (SURVEY §7 M5)
@@ -1402,8 +1403,8 @@ def dedup_threshold_sweep(spark, sf_dir):
         F.col("id_a").alias("ia"),
         F.col("id_b").alias("ib"),
     )
-    thr = spark.createDataFrame(
-        [(0.3,), (0.35,), (0.4,), (0.45,), (0.5,)], "thr double"
+    thr = local_frame(
+        spark, [(0.3,), (0.35,), (0.4,), (0.45,), (0.5,)], "thr double"
     )
     tot = emb.agg(F.count(F.lit(1)).cast("bigint").alias("nv"))
     hit = F.when(F.col("cs") >= F.col("thr"), 1).otherwise(0)

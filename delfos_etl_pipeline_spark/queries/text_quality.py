@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from delfos_etl_pipeline_spark.functions.stable import round_half_up
 from delfos_etl_pipeline_spark.queries._registry import _t, query, spread_scan
+from delfos_etl_pipeline_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Quality filtering, PII redaction, normalization, corpus n-grams,
@@ -390,7 +391,8 @@ def text_lm_bigram_score(spark, sf_dir):
         .select("bg", "nb", "nu")
         .collect()
     )
-    tdf = docs.sparkSession.createDataFrame(
+    tdf = local_frame(
+        docs.sparkSession,
         [
             (
                 r["bg"],
@@ -820,8 +822,8 @@ def curate_quality_gate_sweep(spark, sf_dir):
     q = text_stats(docs, "doc_id", "text").select(
         "doc_id", "quality_score"
     ).join(docs.select("doc_id", "n_chars"), "doc_id")
-    thr = spark.createDataFrame(
-        [(0.2,), (0.4,), (0.5,), (0.6,), (0.8,)], "thr double"
+    thr = local_frame(
+        spark, [(0.2,), (0.4,), (0.5,), (0.6,), (0.8,)], "thr double"
     )
     tot = q.agg(
         F.count(F.lit(1)).cast("bigint").alias("td"),
@@ -1009,7 +1011,8 @@ def text_blocklist_screen(spark, sf_dir):
     list is a loaded blocklist table (UT1, custom domain lists) —
     the plan is unchanged at 100 TB because the list side stays
     broadcast-sized."""
-    bl = spark.createDataFrame(
+    bl = local_frame(
+        spark,
         [
             ("latency", "slow"), ("latency", "small"),
             ("dup", "dup"), ("dup", "merge"), ("dup", "copy"),

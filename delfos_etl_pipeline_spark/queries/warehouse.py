@@ -15,6 +15,7 @@ from delfos_etl_pipeline_spark.functions.stable import (
 )
 from delfos_etl_pipeline_spark.queries._registry import _t, query, spread_scan
 from delfos_etl_pipeline_spark.queries.windows_olap import _approx_rank_ok
+from delfos_etl_pipeline_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # CDC / warehouse maintenance + event analytics (beyond the reference's
@@ -2432,7 +2433,8 @@ def dq_benford_digits(spark, sf_dir):
     )
     o = d.groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("observed"))
     t = o.agg(F.sum("observed").cast("bigint").alias("n"))
-    ratios = spark.createDataFrame(
+    ratios = local_frame(
+        spark,
         [
             (dd, math.floor(math.log10(1 + 1.0 / dd) * 1e12 + 0.5) / 1e12)
             for dd in range(1, 10)

@@ -12,8 +12,10 @@ by the source adapter (see sources/parquet.py).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 # Configs that must be set before the JVM starts.
 _STARTUP_CONF: dict[str, str] = {
@@ -69,3 +71,48 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: str | StructType
+) -> DataFrame:
+    """A small frame built from driver ``rows`` that plans as a JVM
+    ``LocalRelation`` / ``LocalTableScan``: the rows cross to the JVM in
+    Arrow batches, so scanning (and broadcasting) the frame runs no
+    Python worker. ``spark.createDataFrame(rows, schema)`` instead plans a
+    ``Scan ExistingRDD`` whose every evaluation — each broadcast build of
+    a lookup table — is a Python-worker task per core.
+
+    Use it for broadcast lookup frames assembled on the driver (dims,
+    offsets, thresholds, model tables). Keep data-sized frames and query
+    output on ``createDataFrame``: a LocalRelation is held in the
+    driver's plan, and a 300k-row one took 1.97 s to count against
+    0.55 s through the RDD path.
+
+    The result equals ``spark.createDataFrame(rows, schema)``: same
+    schema (``schema`` is a DDL string or a ``StructType``), same rows,
+    same type verification. Values are converted by the Spark types'
+    own ``toInternal``, so a naive ``datetime`` in a ``timestamp`` column
+    is read as process-local time, exactly as ``createDataFrame(rows)``
+    reads it (an aware one by its own offset) — a timestamp collected
+    from Spark round-trips under any ``TZ``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _make_type_verifier
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    verify = _make_type_verifier(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(row))
+    columns = list(zip(*internal)) or [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(list(col), type=to_arrow_type(f.dataType))
+            for col, f in zip(columns, struct.fields)
+        ],
+        names=struct.names,
+    )
+    return spark.createDataFrame(table, schema=struct)

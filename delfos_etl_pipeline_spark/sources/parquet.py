@@ -206,9 +206,10 @@ def spread_small_scan(df: DataFrame, path: str, *key_cols: str) -> DataFrame:
     exists at 100 TB. Deterministic keyed repartition (never rand —
     SPARK-38388), pinned count (AQE would coalesce the small exchange
     to one partition and re-serialize the work). Sizing: local-path
-    fast path, Hadoop FileSystem API for any other URI; any sizing
-    failure returns ``df`` unchanged (fail-safe — never adds an
-    exchange it cannot justify)."""
+    fast path over top-level ``*.parquet`` files, Hadoop FileSystem
+    content summary (recursive) for any other URI or when that sum is 0;
+    any sizing failure returns ``df`` unchanged (fail-safe — never adds
+    an exchange it cannot justify)."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     try:
@@ -229,8 +230,10 @@ def spread_small_scan(df: DataFrame, path: str, *key_cols: str) -> DataFrame:
             size = os.path.getsize(path)
     except OSError:
         size = None
-    if size is None:
-        # non-local URI (or racing layout change): ask the Hadoop FS
+    if not size:
+        # non-local URI, racing layout change, or a layout the top-level
+        # listing cannot see (key=value/ partitions, nested dirs): ask the
+        # Hadoop FS, whose content summary recurses
         try:
             jvm = spark.sparkContext._jvm
             hpath = jvm.org.apache.hadoop.fs.Path(path)

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from delfos_etl_pipeline_spark.session import local_frame
+
 
 def write_partitioned(
     df: DataFrame,
@@ -546,7 +548,8 @@ def compact_partitions(
                 *[F.col(c) for c in sort_within],
             ).sortWithinPartitions(*[F.col(c) for c in sort_within])
         else:
-            n_map = spark.createDataFrame(
+            n_map = local_frame(
+                spark,
                 [(r["_pv"], n_per_part[r["_pv"]]) for r in counts],
                 df.select(F.col(partition_col).alias("_pv")).schema.add(
                     "_nf", "long"

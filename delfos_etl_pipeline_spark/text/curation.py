@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from delfos_etl_pipeline_spark.dedup.ngram import shingle_arrays
+from delfos_etl_pipeline_spark.session import local_frame
 
 #: md5 hex digests are 32 lowercase hex chars; any of them sorts below
 #: "g", so "g" is the keep-everything threshold (rate >= 1.0) and ""
@@ -155,7 +156,7 @@ def _global_prefix_sum(
     off_schema = "_pid int, " + ", ".join(
         f"_off{i} bigint" for i in range(len(value_cols))
     )
-    off = spark.createDataFrame(offsets, off_schema)
+    off = local_frame(spark, offsets, off_schema)
     out = local.join(F.broadcast(off), "_pid")
     for i, oc in enumerate(out_cols):
         out = out.withColumn(

@@ -7,6 +7,8 @@ scan. A regression here (a dim falling back to a shuffle join, a filter
 evaluated post-scan) is invisible at test scale but dominant at 100×.
 """
 
+import pytest
+
 from delfos_etl_pipeline_spark.queries import queries
 
 QS = queries()
@@ -63,10 +65,32 @@ def test_q18_semi_join_before_wide_join(spark, sf_dir):
 
 def test_flagship_single_shuffle(spark, sf_dir):
     """The A1 pipeline: one aggregate exchange + the broadcast dim join —
-    no second data shuffle."""
+    no second data shuffle. The signal dim is a JVM local relation, so its
+    broadcast build side runs no Python worker."""
+    import re
+
     plan = _plan(spark, sf_dir, "a1_pipeline_long")
     assert _count(plan, "BroadcastHashJoin") == 1
     assert _count(plan, "SortMergeJoin") + _count(plan, "ShuffledHashJoin") == 0
+    assert "ExistingRDD" not in plan, plan
+    assert re.search(
+        r"BroadcastExchange \(\d+\)\n\s*\+- LocalTableScan \(\d+\)", plan
+    ), plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "w6_rolling_median_prod",  # operators/rank.py offsets
+        "text_blocklist_screen",  # queries/text_quality.py blocklist
+    ],
+)
+def test_broadcast_lookups_are_local_relations(spark, sf_dir, name):
+    """Driver-built broadcast lookups plan as LocalTableScan, never as a
+    Python-RDD scan."""
+    plan = _plan(spark, sf_dir, name)
+    assert _count(plan, "LocalTableScan") >= 1, plan
+    assert "ExistingRDD" not in plan, plan
 
 
 def test_mixture_sample_is_pure_narrow(spark, sf_dir):

@@ -1,17 +1,25 @@
 """Sources & sinks: synthetic generator laws, partitioned sink semantics,
-HTTP connector (fake fetcher), catalog introspection."""
+HTTP connector (fake fetcher), catalog introspection, driver-built local
+frames, scan spreading."""
 
 import datetime as dt
+import os
+import subprocess
+import sys
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from delfos_etl_pipeline_spark.operators.introspect import (
     foreign_keys,
     schema_structure,
     table_columns,
 )
+from delfos_etl_pipeline_spark.session import local_frame
 from delfos_etl_pipeline_spark.sources.http_json import read_sensor_api
+from delfos_etl_pipeline_spark.sources.parquet import spread_small_scan
 from delfos_etl_pipeline_spark.sources.sinks import seed_guard, write_partitioned
 from delfos_etl_pipeline_spark.sources.synthetic import (
     generate_sensor_data,
@@ -409,3 +417,114 @@ def test_compact_partitions_recovers_interrupted_swap(spark, tmp_path):
     assert spark.read.parquet(path).count() == rows
     assert stats["files_after"] <= stats["files_before"]
     assert len(glob.glob(path + "/*/*.parquet")) == stats["files_after"]
+
+
+LOCAL_DDL = (
+    "i int, b bigint, s string, d double, m decimal(18,9), "
+    "v array<double>, day date, ts timestamp"
+)
+LOCAL_ROWS = [
+    (
+        1,
+        2**40,
+        "a",
+        0.5,
+        Decimal("-1.234567891"),
+        [1.0, None, -0.0],
+        dt.date(2024, 2, 29),
+        dt.datetime(2024, 3, 1, 12, 0, 0, 123),
+    ),
+    (None, None, None, None, None, None, None, None),
+    (-7, -1, "", float("inf"), Decimal("0"), [], dt.date(1970, 1, 1),
+     dt.datetime(1969, 12, 31, 23, 59, 59, tzinfo=dt.timezone.utc)),
+]
+LOCAL_STRUCT = T.StructType(
+    [
+        T.StructField("_pid", T.IntegerType(), False),
+        T.StructField("_base", T.DoubleType(), True),
+    ]
+)
+
+
+@pytest.mark.parametrize(
+    "rows,schema",
+    [
+        (LOCAL_ROWS, LOCAL_DDL),
+        ([], LOCAL_DDL),
+        ([(0, None), (1, 2.5)], LOCAL_STRUCT),
+    ],
+    ids=["all-types", "empty", "struct-schema"],
+)
+def test_local_frame_matches_create_dataframe(spark, rows, schema):
+    """local_frame is createDataFrame(rows, schema) — same schema (incl.
+    nullability), same rows — but plans as a JVM LocalRelation."""
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+
+
+def test_local_frame_rejects_what_create_dataframe_rejects(spark):
+    with pytest.raises(TypeError):
+        spark.createDataFrame([(1,)], "x double")
+    with pytest.raises(TypeError):
+        local_frame(spark, [(1,)], "x double")
+
+
+_TZ_ROUNDTRIP = """
+from pyspark.sql import SparkSession
+from delfos_etl_pipeline_spark.session import local_frame
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .config("spark.sql.session.timeZone", "UTC")
+    .getOrCreate()
+)
+src = spark.sql("SELECT 1 AS id, TIMESTAMP'2024-01-02 12:00:00' AS ts")
+rows = [tuple(r) for r in src.collect()]
+back = local_frame(spark, rows, "id int, ts timestamp")
+print("MATCHED", back.join(src, ["id", "ts"]).count())
+spark.stop()
+"""
+
+
+def test_local_frame_timestamp_roundtrip_non_utc_tz():
+    """A timestamp collected from Spark is a naive process-local datetime;
+    passed back through local_frame under a non-UTC TZ it must still join
+    to its source row (reading it as UTC wall time would shift it by the
+    zone offset and match nothing)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TZ="America/Sao_Paulo", PYTHONPATH=root)
+    out = subprocess.run(
+        [sys.executable, "-c", _TZ_ROUNDTRIP],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "MATCHED 1" in out.stdout, out.stdout + out.stderr
+
+
+def test_spread_small_scan_sizes_partitioned_dirs(spark, tmp_path):
+    """A key=value/ layout has no top-level *.parquet files; sizing must
+    recurse instead of reading it as 0 bytes and respreading a relation
+    of any size."""
+    path = str(tmp_path / "parted")
+    spark.range(3000).withColumn("k", F.col("id") % 3).write.partitionBy(
+        "k"
+    ).parquet(path)
+    df = spark.read.parquet(path)
+    # a few KB: one split at the default 128 MB, so it is spread
+    assert spread_small_scan(df, path, "id") is not df
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "512")
+    try:
+        # the same bytes are now many splits: left unchanged
+        assert spread_small_scan(df, path, "id") is df
+    finally:
+        spark.conf.set(key, old)
