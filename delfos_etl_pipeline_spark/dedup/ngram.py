@@ -237,9 +237,9 @@ def jaccard_pairs_prefix(
     )
     # persisted: BOTH self-join sides consume it — without the cache the
     # freq-join + per-doc rank window subtree is planned (and executed)
-    # once per side (seen in plans/r16/dedup_jaccard_prefix_before.txt:
-    # two Window nodes, each over its own Exchange of the shingle
-    # relation). Same no-paired-unpersist discipline as the arrays above.
+    # once per side: the uncached plan holds two Window nodes, each over
+    # its own Exchange of the shingle relation. Same no-paired-unpersist
+    # discipline as the arrays above.
     prefix = (
         sh.join(freq, "shingle")
         .withColumn("_r", F.row_number().over(rankw))

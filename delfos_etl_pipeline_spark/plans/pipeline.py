@@ -20,6 +20,13 @@ Catalyst sees through the whole plan (predicate pushdown into the scan,
 partial aggregation map-side, broadcast hash join for the dimension).
 At 100 TB the only shuffle is the window group-by, keyed on the window
 start, which is near-uniformly distributed for time-series data.
+
+Each block's relational step is one parameterized ``spark.sql`` statement
+over ``{df}``. At 1,440 rows a day the daily run's cost is per-call
+overhead: built from ``pyspark.sql.functions`` Column calls (each paying
+PySpark's call-site capture) and a dozen separately analyzed intermediate
+frames, one extract + transform build sent ~740 py4j commands; as
+statements it sends under 100.
 """
 
 from __future__ import annotations
@@ -37,12 +44,27 @@ from delfos_etl_pipeline_spark.session import local_frame
 #: Sample (ddof=1) stddev is load-bearing: SURVEY.md §2.10(2).
 DEFAULT_STATS: tuple[str, ...] = ("mean", "min", "max", "std")
 
-_STAT_FN = {
-    "mean": F.avg,
-    "min": F.min,
-    "max": F.max,
-    "std": F.stddev_samp,  # NULL for 1-row bins ≡ pandas NaN (ddof=1)
+#: The one stat vocabulary: stat name → Spark SQL aggregate function. The
+#: batch ``windowed_stats`` statement and the streaming runner both read it.
+STAT_SQL = {
+    "mean": "avg",
+    "min": "min",
+    "max": "max",
+    "std": "stddev_samp",  # NULL for 1-row bins ≡ pandas NaN (ddof=1)
 }
+
+
+def _q(name: str) -> str:
+    """``name`` as a quoted identifier inside statement text that
+    ``spark.sql(text, df=...)`` formats with ``str.format``: backticks
+    doubled for the SQL parser, braces doubled for the formatter."""
+    quoted = "`" + name.replace("`", "``") + "`"
+    return quoted.replace("{", "{{").replace("}", "}}")
+
+
+def _nullish(col: str) -> str:
+    """SQL predicate: NULL or NaN — what ``na.drop`` counts as missing."""
+    return f"({col} IS NULL OR isnan({col}))"
 
 
 def signal_names(measures: tuple[str, ...], stats: tuple[str, ...] = DEFAULT_STATS) -> list[str]:
@@ -84,18 +106,28 @@ def extract_range(
     daily runs (SURVEY.md §2.10(1)). ``inclusive_end=True`` preserves that
     for parity; pass False for the sane half-open ``[start, end)`` default
     in new pipelines.
+
+    One parameterized statement: the bounds bind to the ``:start`` /
+    ``:end`` markers as literals, exactly as ``F.lit`` would type them (a
+    naive ``datetime`` is a timestamp, a string is compared after Spark's
+    implicit cast). :func:`run_day` observes its row count on this frame
+    rather than counting it in a separate job.
     """
     if columns:
         unknown = [c for c in columns if c not in df.columns]
         if unknown:  # P2 allowlist validation (api/app/main.py:120-131)
             raise ValueError(f"unknown columns: {unknown}; available: {df.columns}")
-        df = df.select(*columns)
-    c = F.col(ts_col)
+    ts = _q(ts_col)
+    conds, args = [], {}
     if start is not None:
-        df = df.where(c >= F.lit(start))
+        conds.append(f"{ts} >= :start")
+        args["start"] = start
     if end is not None:
-        df = df.where(c <= F.lit(end) if inclusive_end else c < F.lit(end))
-    return df
+        conds.append(f"{ts} {'<=' if inclusive_end else '<'} :end")
+        args["end"] = end
+    select = ", ".join(map(_q, columns)) if columns else "*"
+    where = f" WHERE {' AND '.join(conds)}" if conds else ""
+    return df.sparkSession.sql(f"SELECT {select} FROM {{df}}{where}", args, df=df)
 
 
 def windowed_stats(
@@ -113,31 +145,40 @@ def windowed_stats(
 
     Spark ``window()`` bins are left-closed/left-labeled, identical to the
     pandas resample defaults (SURVEY.md §2.10(6)); the label column is the
-    window *start*. Rows where every aggregate is NULL are pruned
-    (``dropna(how='all')`` ≡ etl_process.py:98).
+    window *start*. Rows where every aggregate is NULL (or NaN, as
+    ``na.drop`` counts it) are pruned (``dropna(how='all')`` ≡
+    etl_process.py:98). Measures are numeric.
 
+    The default path is one SQL statement (aggregate and bin pruning);
     ``stable=True`` computes mean/std from exact decimal sums with
     explicit half-up rounding (functions/stable.py) — bit-identical
     across engines/partitionings, for oracle-compared outputs.
     """
-    keys = [F.window(F.col(ts_col), window)] + [F.col(k) for k in (extra_keys or [])]
-    head_cols = [F.col("window.start").alias("window_start")]
-    head_cols += [F.col(k) for k in (extra_keys or [])]
+    names = signal_names(measures, stats)
     if stable:
         from delfos_etl_pipeline_spark.functions.stable import (
             stable_stat_aggs,
             stable_stat_projection,
         )
 
+        keys = [F.window(F.col(ts_col), window)] + [F.col(k) for k in (extra_keys or [])]
+        head_cols = [F.col("window.start").alias("window_start")]
+        head_cols += [F.col(k) for k in (extra_keys or [])]
         wide = df.groupBy(*keys).agg(*stable_stat_aggs(measures))
         wide = wide.select(*head_cols, *stable_stat_projection(measures, stats))
-    else:
-        aggs = [
-            _STAT_FN[s](F.col(m)).alias(f"{m}_{s}") for m in measures for s in stats
-        ]
-        out_cols = head_cols + [F.col(f"{m}_{s}") for m in measures for s in stats]
-        wide = df.groupBy(*keys).agg(*aggs).select(*out_cols)
-    return wide.na.drop(how="all", subset=signal_names(measures, stats))
+        return wide.na.drop(how="all", subset=names)
+    key_sql = "".join(f", {_q(k)}" for k in (extra_keys or []))
+    aggs = ", ".join(
+        f"{STAT_SQL[s]}({_q(m)}) AS {_q(f'{m}_{s}')}" for m in measures for s in stats
+    )
+    all_missing = " AND ".join(_nullish(_q(n)) for n in names)
+    return df.sparkSession.sql(
+        f"SELECT * FROM (SELECT window.start AS window_start{key_sql}, {aggs} "
+        f"FROM {{df}} GROUP BY window({_q(ts_col)}, :w){key_sql}) "
+        f"WHERE NOT ({all_missing})",
+        {"w": window},
+        df=df,
+    )
 
 
 def to_long(
@@ -150,16 +191,19 @@ def to_long(
 ) -> DataFrame:
     """R1 — unpivot/melt wide→long (/root/reference/etl/etl_process.py:104-110).
 
-    ``unpivot`` keeps NULL values just like ``pd.melt``; the explicit
-    ``na.drop`` replicates the reference's follow-up ``dropna()``
+    ``UNPIVOT INCLUDE NULLS`` keeps NULL values just like ``pd.melt``; the
+    ``WHERE`` replicates the reference's follow-up ``dropna()``
     (etl_process.py:112) that removes single-row-bin std NULLs — without it
-    they leak through (SURVEY.md §2.10(3))."""
-    long_df = wide.unpivot(
-        [F.col(c) for c in id_cols], [F.col(c) for c in value_cols], name_col, value_col
+    they leak through (SURVEY.md §2.10(3)). Like ``na.drop`` it drops NaN
+    values too, so the value columns are numeric."""
+    value = _q(value_col)
+    where = f" WHERE NOT {_nullish(value)}" if drop_null_values else ""
+    return wide.sparkSession.sql(
+        f"SELECT {', '.join(map(_q, id_cols))}, {_q(name_col)}, {value} "
+        f"FROM {{df}} UNPIVOT INCLUDE NULLS ({value} FOR {_q(name_col)} "
+        f"IN ({', '.join(map(_q, value_cols))})){where}",
+        df=wide,
     )
-    if drop_null_values:
-        long_df = long_df.na.drop(subset=[value_col])
-    return long_df
 
 
 def map_signals(
@@ -176,17 +220,23 @@ def map_signals(
     itself); the warning path is a LEFT ANTI join, computed only when a
     ``log_unmapped`` callback is supplied so the hot path stays single-pass.
     """
-    dim = F.broadcast(signal_dim.select(F.col("name"), F.col("id").alias("signal_id")))
+    spark, name = long_df.sparkSession, _q(name_col)
     if log_unmapped is not None:
-        unmapped = (
-            long_df.join(dim, long_df[name_col] == dim["name"], "left_anti")
-            .select(name_col)
-            .distinct()
+        unmapped = spark.sql(
+            f"SELECT /*+ BROADCAST(d) */ DISTINCT l.{name} FROM {{long_df}} l "
+            f"LEFT ANTI JOIN {{dim}} d ON l.{name} = d.name",
+            long_df=long_df,
+            dim=signal_dim,
         )
         names = [r[0] for r in unmapped.collect()]
         if names:
             log_unmapped(names)
-    return long_df.join(dim, long_df[name_col] == dim["name"], "inner").drop("name")
+    return spark.sql(
+        f"SELECT /*+ BROADCAST(d) */ l.*, d.id AS signal_id FROM {{long_df}} l "
+        f"JOIN {{dim}} d ON l.{name} = d.name",
+        long_df=long_df,
+        dim=signal_dim,
+    )
 
 
 def sensor_pipeline(
@@ -202,11 +252,7 @@ def sensor_pipeline(
     wide = windowed_stats(df, ts_col, measures, window)
     long_df = to_long(wide, ["window_start"], signal_names(measures))
     mapped = map_signals(long_df, signal_dim)
-    return mapped.select(
-        F.col("window_start").alias("timestamp"),
-        F.col("signal_id"),
-        F.col("value"),
-    )
+    return mapped.selectExpr("window_start AS timestamp", "signal_id", "value")
 
 
 @dataclass
@@ -219,6 +265,20 @@ class RunResult:
     rows_loaded: int = 0
     error: str | None = None
     stats: dict = field(default_factory=dict)
+
+
+def _observed_rows(obs: Observation) -> int | None:
+    """The ``count(1)`` an observation collected, or None when its subtree
+    was pruned as provably empty and never ran (an empty day's shuffle
+    stage under AQE, a join side under ``PropagateEmptyRelation``). The
+    JVM row is read directly: ``Observation.get`` fails on the empty row
+    a pruned observation leaves behind."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.size() else None
+
+
+def _noop_sink(out: DataFrame) -> None:
+    out.write.format("noop").mode("overwrite").save()
 
 
 def run_day(
@@ -235,7 +295,19 @@ def run_day(
     ``inclusive_end=False`` (half-open) is the engine default, fixing the
     reference's midnight double-count (SURVEY.md §2.10(1)); pass True for
     bug-compatible parity. ``sink`` is a callable(DataFrame) — e.g. a
-    partitioned parquet append or JDBC write (S5).
+    partitioned parquet append or JDBC write (S5); without one the plan
+    runs through the ``noop`` writer.
+
+    One Spark action per day: ``rows_extracted`` and ``rows_loaded`` are
+    observations that ride the sink's own write, so there is no separate
+    count of the day and no recount of the output. ``no_data`` is decided
+    after that action, which means the sink IS called on an empty day and
+    receives an empty frame; ``write_partitioned``'s dynamic overwrite then
+    writes no data file and leaves existing partitions untouched. When an
+    observed subtree is pruned as provably empty (an empty day, or an
+    empty or non-matching ``signal_dim``), the extracted count falls back
+    to one ``count()`` of the day and the loaded count is 0 — the same
+    results as counting first.
     """
     start = _dt.datetime.fromisoformat(day)
     end = start + _dt.timedelta(days=1)
@@ -243,20 +315,17 @@ def run_day(
         day_df = extract_range(
             df, ts_col, start, end, columns=[ts_col, *measures], inclusive_end=inclusive_end
         )
-        extracted = day_df.count()
-        if extracted == 0:  # P6 — empty-input short-circuit (etl_process.py:79-81)
+        extracted_obs = Observation(f"run_day_{day}_extracted")
+        loaded_obs = Observation(f"run_day_{day}_loaded")
+        observed = day_df.observe(extracted_obs, F.expr("count(1) AS rows"))
+        out = sensor_pipeline(observed, signal_dim, ts_col, measures)
+        (sink or _noop_sink)(out.observe(loaded_obs, F.expr("count(1) AS rows")))
+        extracted = _observed_rows(extracted_obs)
+        if extracted is None:
+            extracted = day_df.count()
+        if extracted == 0:  # P6 — empty input is no_data (etl_process.py:79-81)
             return RunResult(day, "no_data")
-        out = sensor_pipeline(day_df, signal_dim, ts_col, measures)
-        if sink is not None:
-            # One job: the loaded-row count rides the sink's own action via
-            # an Observation instead of a second count() that would re-run
-            # the whole extract→transform plan (2× waste per partition).
-            obs = Observation(f"run_day_{day}")
-            observed = out.observe(obs, F.count(F.lit(1)).alias("rows_loaded"))
-            sink(observed)
-            loaded = obs.get["rows_loaded"]
-        else:
-            loaded = out.count()
+        loaded = _observed_rows(loaded_obs) or 0
         return RunResult(day, "success", rows_extracted=extracted, rows_loaded=loaded)
     except Exception as exc:  # noqa: BLE001 — mirror reference's error record
         return RunResult(day, "error", error=str(exc))

@@ -68,10 +68,10 @@ def write_jdbc(
 def seed_guard(spark, path: str) -> bool:
     """S9/P6 — idempotent-seed / empty-input guard: True if the target is
     absent/empty so the caller should seed
-    (/root/reference/database/seed_fonte_docker.py:78-83). The same
-    ``isEmpty()`` is the engine's P6 short-circuit (the reference's
-    ``df.empty`` skips at transform and load, etl_process.py:79,133) —
-    see plans/pipeline.py, which skips the write for empty slices."""
+    (/root/reference/database/seed_fonte_docker.py:78-83). The reference's
+    ``df.empty`` also skips transform and load (etl_process.py:79,133);
+    ``run_day`` (plans/pipeline.py) instead decides ``no_data`` after its
+    one write, which for an empty slice writes no data file."""
     try:
         return spark.read.parquet(path).isEmpty()
     except Exception:

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from delfos_etl_pipeline_spark.plans.pipeline import DEFAULT_STATS, _STAT_FN
+from delfos_etl_pipeline_spark.plans.pipeline import DEFAULT_STATS, STAT_SQL
 
 
 def streaming_windowed_stats(
@@ -64,7 +64,11 @@ def streaming_windowed_stats(
             F.col("window.start").alias("window_start"),
             *stable_stat_projection(measures, stats),
         )
-    aggs = [_STAT_FN[st](F.col(m)).alias(f"{m}_{st}") for m in measures for st in stats]
+    aggs = [
+        F.call_function(STAT_SQL[st], F.col(m)).alias(f"{m}_{st}")
+        for m in measures
+        for st in stats
+    ]
     wide = grouped.agg(*aggs)
     return wide.select(
         F.col("window.start").alias("window_start"),

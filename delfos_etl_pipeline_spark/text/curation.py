@@ -309,9 +309,9 @@ def curate_pipeline_staged(
     # boundary writes it induces cost MORE than the single-task compute
     # at bench-scale boundaries (whole pipeline 3.34 s → 4.89 s). At
     # production boundary sizes the stages split by themselves and the
-    # single-task pathology doesn't exist; per-stage timings
-    # (tools/staged_split.py): 01 0.32, 02 0.22, 03 0.86, 04 0.17,
-    # 05 0.42 s — job fixed costs dominate, not compute.
+    # single-task pathology doesn't exist; timed one stage at a time at
+    # bench scale, the five stages took 0.32, 0.22, 0.86, 0.17 and
+    # 0.42 s — job fixed costs dominate, not compute.
     def stage(df: DataFrame, name: str) -> DataFrame:
         path = f"{workdir}/{name}"
         df.write.mode("overwrite").parquet(path)
