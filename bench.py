@@ -2,10 +2,28 @@
 
 Usage: python bench.py
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_DRIVER_MEM (default 16g).
 
-Each query is forced to full execution with the noop sink (no driver-side
-collect, so we measure the engine, not result transfer).
+Every timed run is cold and forced to full execution: ``time_query`` clears
+the cache and runs a JVM GC outside the timer before each timed run, and
+each run writes through the noop sink (no driver-side collect, so the
+engine is measured, not result transfer).
+
+A name is timed with one of two recipes:
+
+* ``fresh``: a new python + JVM process (``child``), ``WARM_FRESH``
+  warm-ups. Used for the ``STATE`` names and for every name whose median
+  in the committed record is at least ``FRESH_S``.
+* ``pooled``: the other names, ``CHUNK`` to a SparkContext in one shared
+  JVM, ``WARM_POOLED`` warm-up each. A JVM start plus its first table scan
+  costs 20-25 s on a 4-vCPU host, so cheap names are not worth a process
+  each. A pooled name whose median comes out at least ``FRESH_S``, or that
+  fails the reliability rule, is re-timed fresh and the fresh number is
+  recorded.
+
+The full record goes to bench_diag.json (committed), stamped with
+``engine_tree_hash()`` and carrying a top-level ``ok``;
+tests/test_registry.py gates on both.
 """
 
 from __future__ import annotations
@@ -13,10 +31,12 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 #: Representative spread: flagship pipeline, heavy aggregation, joins,
 #: window functions, dedup (exact + LSH), similarity, text, as-of.
@@ -241,7 +261,7 @@ HEADLINE = [
     # round 15: the certified large-k MAINTENANCE chapters — their
     # timed cost is the one-time state build (build + 2 merges +
     # remove + compact, every assignment/encode on the matmul
-    # engines) plus the persisted-store probe; isolate tier, like the
+    # engines) plus the persisted-store probe; in STATE, like the
     # other state builders
     "sim_ivf_lifecycle_bigk",
     "sim_pq_lifecycle_bigk",
@@ -258,47 +278,86 @@ HEADLINE = [
 # Streaming queries (streaming_*) are deliberately NOT in the timed batch
 # list: their timed path includes temp-dir writes and sink-table drains,
 # which would measure IO setup, not the engine. Streaming throughput is
-# measured separately — see the "streaming" section below, which reports
-# steady-state micro-batch rows/sec from the progress feed instead.
+# measured separately (``_stream``): steady-state micro-batch rows/sec
+# from the progress feed.
+
+#: Names whose timed body reads or writes persisted scratch state (an
+#: index or staged parquet built once per process), so their cost depends
+#: on what the process did before: always timed fresh.
+STATE = frozenset({
+    "curate_pipeline_staged",
+    "dedup_substring_incremental",
+    "sim_ivf_probe",
+    "dedup_minhash_incremental_indexed",
+    "sim_pq_probe",
+    "sim_ivfpq_probe",
+    "curate_nightly_ingest",
+    "curate_nightly_ingest_day2",
+    "curate_nightly_ingest_day3",
+    "curate_nightly_ingest_day4",
+    "sim_pq_probe_deleted",
+    "sim_pq_probe_compacted",
+    "sim_ivf_lifecycle_bigk",
+    "sim_pq_lifecycle_bigk",
+})
+
+WARM_FRESH = 3  # a fresh process has a cold JIT
+WARM_POOLED = 1
+ITERS = 3
+CHUNK = 8  # pooled names per SparkContext
+FRESH_S = 1.2  # a median at or above this is timed fresh
+FRESH_TRIES = 2
+STREAM_TOPOLOGIES = ("windowed_agg", "dedup", "stream_join")
+DIAG = os.path.join(REPO, "bench_diag.json")
 
 
-# sim_ivf_build / sim_ivf_probe became REGISTERED queries in round 9
-# (VERDICT r8 item 4): build = the deterministic fixed-quantizer full-corpus
-# cell assignment (inlined codegen cosine form), probe = top-k against the
-# PERSISTED partitionBy(cluster) index (built once per process; repeat
-# iterations time only the partition-pruned probe). Both now carry exact
-# DuckDB oracles, so bench_validate can re-time them by name. The seeded
-# k-means FIT cost these names used to include is measured by
-# emb_kmeans_train (a full 3-iteration Lloyd loop) — r8 and earlier
-# sim_ivf_build numbers are not comparable to r9+.
+def engine_tree_hash() -> str:
+    """Content hash of every file whose change can move a benched number:
+    this harness, the driver entry and the engine package. bench.py stamps
+    it into bench_diag.json; tests/test_registry.py fails when the
+    committed record's stamp does not match the working tree. A content
+    hash, not a git SHA, so the check needs no git state and a rebase
+    that leaves these files alone keeps the record valid."""
+    import hashlib
+
+    paths = [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
+    pkg = os.path.join(REPO, "delfos_etl_pipeline_spark")
+    for dirpath, dirs, names in os.walk(pkg):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        paths.extend(os.path.join(dirpath, n) for n in names if n.endswith(".py"))
+    h = hashlib.sha256()
+    for path in sorted(paths):
+        h.update(os.path.relpath(path, REPO).encode())
+        h.update(b"\0")
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
 
 
 def _quiet_stderr() -> None:
     """Redirect fd 2 to bench_stderr.log BEFORE the JVM launches.
 
     The JVM inherits the process stderr at launch, and its startup banner
-    (JDK incubator-module warning, log4j defaults notice, NativeCodeLoader
-    WARN) prints before any in-process Configurator call can run — post-
-    start logger silencing can never catch it (VERDICT r5 item 7 / r6
-    item 3). Duping fd 2 to a log file before the first SparkSession
-    means the driver's ~2000-char output-tail capture sees ONLY the JSON
-    line on stdout; the full stderr stays inspectable in the gitignored
-    log. Python-side tracebacks follow fd 2 into the same file. Disable
-    with SPARK_GRAFT_QUIET=0 for interactive debugging."""
+    prints before any in-process logger call can run. Duping fd 2 to a log
+    file before the first SparkSession means the driver's ~2000-char
+    output-tail capture sees ONLY the JSON line on stdout; the full stderr
+    stays in the gitignored log. Disable with SPARK_GRAFT_QUIET=0 for
+    interactive debugging."""
     if os.environ.get("SPARK_GRAFT_QUIET", "1") == "0":
         return
-    log_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_stderr.log"
-    )
-    fd = os.open(log_path, os.O_WRONLY | os.O_CREAT | os.O_TRUNC)
+    fd = os.open(os.path.join(REPO, "bench_stderr.log"), os.O_WRONLY | os.O_CREAT | os.O_TRUNC)
     os.dup2(fd, 2)
     os.close(fd)
 
 
-def _new_session(cpus: str):
-    """Fresh SparkSession with the bench conf + benign-ERROR silencing."""
+def _new_session():
+    """SparkSession with the bench conf: ``local[SPARK_GRAFT_CPUS]``, as
+    many shuffle partitions, a SPARK_GRAFT_DRIVER_MEM heap, UI off, and
+    known-benign ERROR chatter silenced. The session builder of bench.py,
+    its fresh-process child and tools/."""
     from delfos_etl_pipeline_spark import get_spark
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
         "delfos-bench",
         master=f"local[{cpus}]",
@@ -310,15 +369,12 @@ def _new_session(cpus: str):
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # Silence known-benign ERROR chatter that otherwise pollutes the
-    # captured tail: stopping a streaming query mid-trigger aborts the
-    # in-flight noop epoch (MicroBatchExecution / V2 write exec log ERROR
-    # "aborting"), and executor shutdown races broadcast cleanup
-    # (TorrentBroadcast "Store broadcast ... fail"). Real failures still
-    # surface as exceptions into the bench record, never only as logs.
+    # Stopping a streaming query mid-trigger aborts the in-flight noop
+    # epoch (logged as ERROR "aborting"), and executor shutdown races
+    # broadcast cleanup. Real failures still surface as exceptions into
+    # the record, never only as logs.
     jvm = spark.sparkContext._jvm
-    log_off = jvm.org.apache.logging.log4j.Level.OFF
-    for _logger in (
+    for logger in (
         "org.apache.spark.sql.execution.streaming",
         "org.apache.spark.sql.execution.datasources.v2",
         "org.apache.spark.broadcast.TorrentBroadcast",
@@ -327,139 +383,160 @@ def _new_session(cpus: str):
         "org.apache.spark.storage.BlockManagerMasterEndpoint",
     ):
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            _logger, log_off
+            logger, jvm.org.apache.logging.log4j.Level.OFF
         )
     return spark
 
 
-_ISOLATE_CHILD = r"""
-import json, os, sys, time
-sys.path.insert(0, {repo!r})
-name, sf_dir, warm, iters = {name!r}, {sf_dir!r}, {warm}, {iters}
-from delfos_etl_pipeline_spark import get_spark
-from delfos_etl_pipeline_spark.queries import queries
-from delfos_etl_pipeline_spark.sources.parquet import load_table
-spark = get_spark(
-    "delfos-bench-isolate", master="local[" + {cpus!r} + "]",
-    shuffle_partitions=int({cpus!r}),
-    extra_conf={{"spark.ui.enabled": "false",
-                 "spark.ui.showConsoleProgress": "false",
-                 "spark.driver.memory": {mem!r}}},
-)
-spark.sparkContext.setLogLevel("ERROR")
-fn = queries()[name]
-load_table(spark, sf_dir, "lineitem").count()
-for _ in range(warm):
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-times = []
-for _ in range(iters):
-    spark.sparkContext._jvm.System.gc()
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    times.append(time.time() - t0)
-times.sort()
-mid = len(times) // 2
-gaps = []
-if mid > 0:
-    gaps.append(times[mid] - times[mid - 1])
-if mid + 1 < len(times):
-    gaps.append(times[mid + 1] - times[mid])
-print("RESULT " + json.dumps(
-    {{"median": round(times[mid], 2),
-      "spread": round(min(gaps) if gaps else 0.0, 2),
-      "range": round(times[-1] - times[0], 2)}}))
-"""
+def time_query(spark, fn, sf_dir: str, warm: int, iters: int) -> list[float]:
+    """Raw wall-clock seconds of ``iters`` cold runs of ``fn(spark,
+    sf_dir)`` through the noop sink, after ``warm`` untimed runs (janino
+    codegen and file-index caches are one-time costs per plan shape).
+    Before every timed run, outside the timer, the cache is cleared, so a
+    persist made by an earlier run is rebuilt, and the JVM is GC'd, so an
+    earlier run's garbage is not paid as pause time."""
+
+    def run() -> None:
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    for _ in range(warm):
+        run()
+    samples = []
+    for _ in range(iters):
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
+        t0 = time.perf_counter()
+        run()
+        samples.append(time.perf_counter() - t0)
+    return samples
 
 
-def _run_isolated(name: str, sf_dir: str, cpus: str, warm: int, iters: int):
-    """One query timed in a FULLY FRESH python+JVM subprocess — the
-    bench_validate ground-truth recipe, bit for bit (fresh process, warm
-    warmups, iters timed runs). The r10 and r11 validated runs both
-    caught the in-process isolate sessions reading ~1.3x above fresh-
-    process truth on the sequential rolling-median (4.59s in-session vs
-    3.27/3.33s isolated, third consecutive reproduction): the py4j-
-    reused JVM carries lifetime accumulation (code cache, allocator
-    fragmentation) that session restarts cannot reset, so the only
-    session indistinguishable from the validator's is a new process.
-    ~15s JVM launch per name — paid only for the isolate tier, whose
-    medians decide the headline."""
-    import subprocess
+def summary(samples: list[float]) -> dict[str, float]:
+    """Median, spread and range of raw samples, in seconds to 10 ms.
 
-    repo = os.path.dirname(os.path.abspath(__file__))
-    child = _ISOLATE_CHILD.format(
-        repo=repo, name=name, sf_dir=sf_dir, warm=warm, iters=iters,
-        cpus=cpus, mem=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    The median is the middle sample (the upper one of an even count). The
+    spread is the median's nearest-neighbour gap: how far the reported
+    number is from the closest sample that agrees with it. The max-min
+    range is recorded too, but at 3 samples one GC outlier owns it while
+    the median stays repeatable."""
+    s = sorted(samples)
+    mid = len(s) // 2
+    gaps = [s[mid] - s[mid - 1]] if mid else []
+    if mid + 1 < len(s):
+        gaps.append(s[mid + 1] - s[mid])
+    return {
+        "median": round(s[mid], 2),
+        "spread": round(min(gaps, default=0.0), 2),
+        "range": round(s[-1] - s[0], 2),
+    }
+
+
+def reliable(stats: dict) -> bool:
+    """A median of 1 s or more must sit within half its value of its
+    nearest sample. Below 1 s, scheduling jitter makes a wide spread
+    routine and harmless."""
+    return stats["median"] < 1.0 or stats["spread"] <= 0.5 * stats["median"]
+
+
+def starts_fresh(name: str, prior: dict[str, float]) -> bool:
+    """Whether ``name`` is timed fresh from the start: a state name, or a
+    median of at least FRESH_S in the committed record."""
+    return name in STATE or prior.get(name, 0.0) >= FRESH_S
+
+
+def retime_fresh(stats: dict) -> bool:
+    """Whether a pooled result is re-timed fresh: it is expensive or
+    unreliable."""
+    return stats["median"] >= FRESH_S or not reliable(stats)
+
+
+def record_ok(queries: dict, errors: dict, unreliable: list, streaming: dict) -> bool:
+    """The record's verdict: every HEADLINE name measured, no query or
+    child run failed, no streaming run failed, no name unreliable."""
+    return (
+        all(n in queries for n in HEADLINE)
+        and not errors
+        and not unreliable
+        and not any(k.endswith("_error") for k in streaming)
     )
-    env = dict(os.environ)
-    env.setdefault("SPARK_GRAFT_TEST_SF_DIR", sf_dir)
+
+
+def child(kind: str, arg: str, sf_dir: str) -> dict:
+    """Body of a fresh-process run (started by ``_spawn``): the raw
+    samples of headline name ``arg`` (kind "query") or the steady-state
+    rate of streaming topology ``arg`` (kind "stream")."""
+    spark = _new_session()
+    if kind == "stream":
+        from delfos_etl_pipeline_spark.streaming.bench import measure_stream_rate
+
+        return {"rows_per_sec": measure_stream_rate(spark, arg)["rows_per_sec"]}
+    from delfos_etl_pipeline_spark.queries import queries
+    from delfos_etl_pipeline_spark.sources.parquet import load_table
+
+    load_table(spark, sf_dir, "lineitem").count()  # the JVM's first scan
+    return {"samples": time_query(spark, queries()[arg], sf_dir, WARM_FRESH, ITERS)}
+
+
+def _spawn(kind: str, arg: str, sf_dir: str, timeout: int = 1800) -> dict:
+    """Run ``child`` in a new interpreter, and so a new JVM. Returns its
+    result, or {"error": ...} when it fails or times out; a hung child
+    must not lose the names already measured."""
+    code = (
+        "import json, sys, bench; "
+        "print('RESULT ' + json.dumps(bench.child(*sys.argv[1:])))"
+    )
     try:
         proc = subprocess.run(
-            [sys.executable, "-c", child],
-            capture_output=True, text=True, timeout=1800, env=env,
+            [sys.executable, "-c", code, kind, arg, sf_dir],
+            cwd=REPO, capture_output=True, text=True, timeout=timeout,
         )
     except subprocess.TimeoutExpired:
-        # a hung isolate child must not abort the whole run and lose every
-        # already-measured median (ADVICE r11) — record it like any other
-        # child failure; main() marks the headline total partial.
-        return {"error": "isolate child timed out after 1800s"}
+        return {"error": f"{kind} child timed out after {timeout}s"}
     for line in proc.stdout.splitlines():
         if line.startswith("RESULT "):
             return json.loads(line[len("RESULT "):])
     return {"error": (proc.stderr or proc.stdout)[-300:]}
 
 
-_STREAM_CHILD = r"""
-import json, sys
-sys.path.insert(0, {repo!r})
-from delfos_etl_pipeline_spark import get_spark
-from delfos_etl_pipeline_spark.streaming.bench import measure_stream_rate
-spark = get_spark(
-    "delfos-bench-stream", master="local[" + {cpus!r} + "]",
-    shuffle_partitions=int({cpus!r}),
-    extra_conf={{"spark.ui.enabled": "false",
-                 "spark.ui.showConsoleProgress": "false",
-                 "spark.driver.memory": {mem!r}}},
-)
-spark.sparkContext.setLogLevel("ERROR")
-res = measure_stream_rate(spark, {topo!r})
-print("RESULT " + json.dumps({{"rows_per_sec": res["rows_per_sec"]}}))
-"""
+def _time_fresh(name: str, sf_dir: str) -> dict:
+    """Summary of a fresh-process run of ``name``; up to FRESH_TRIES runs,
+    stopping at the first reliable one."""
+    for _ in range(FRESH_TRIES):
+        res = _spawn("query", name, sf_dir)
+        if "error" in res:
+            return res
+        stats = summary(res["samples"]) | {"recipe": "fresh", "warmups": WARM_FRESH}
+        if reliable(stats):
+            break
+    return stats
 
 
-def _run_stream_isolated(topo: str, cpus: str):
-    """One streaming topology measured in a FULLY FRESH python+JVM
-    subprocess — the same isolate-or-anchor discipline the batch tier
-    earned (VERDICT r12 item 2: streaming rates fell 28-31% in lockstep
-    with the r12 host-window drift on untouched code, with no isolate
-    tier to separate harness state from host speed). A fresh process
-    per topology makes the rates same-recipe comparable across rounds;
-    residual round-over-round movement is then host window, which the
-    recorded host_probe anchor quantifies."""
-    import subprocess
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    child = _STREAM_CHILD.format(
-        repo=repo, topo=topo, cpus=cpus,
-        mem=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-    )
-    try:
-        proc = subprocess.run(
-            [sys.executable, "-c", child],
-            capture_output=True, text=True, timeout=900,
-        )
-    except subprocess.TimeoutExpired:
-        return {"error": "stream child timed out after 900s"}
-    for line in proc.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT "):])
-    return {"error": (proc.stderr or proc.stdout)[-300:]}
+def _stream(topo: str, sf_dir: str) -> dict:
+    """Rows/sec of one streaming topology, each run in a fresh process:
+    two runs within 20% publish their mean, otherwise a third run
+    arbitrates and the median publishes. All raw runs are recorded, so a
+    published rate is never a lone sample."""
+    runs: list[float] = []
+    out: dict = {}
+    for _ in range(3):
+        res = _spawn("stream", topo, sf_dir)
+        if "error" in res:
+            out[f"{topo}_error"] = str(res["error"])[:80]
+            break
+        runs.append(res["rows_per_sec"])
+        if len(runs) == 2 and min(runs) >= 0.8 * max(runs):
+            break
+    if runs:
+        mean = round(sum(runs) / len(runs), 1)
+        out[f"{topo}_rows_per_sec"] = sorted(runs)[1] if len(runs) == 3 else mean
+        out[f"{topo}_runs"] = runs
+    return out
 
 
 def _md5_chain(_=None) -> float:
     """One fixed CPU workload unit for the host-speed anchor. Module
     level, because multiprocessing.Pool pickles the mapped callable by
-    qualified name even under fork — a closure raises AttributeError
-    (and the probe's except would silently record -1)."""
+    qualified name."""
     import hashlib
 
     h = b"x" * 4096
@@ -470,459 +547,141 @@ def _md5_chain(_=None) -> float:
 
 
 def _host_speed_probe() -> dict[str, float]:
-    """Deterministic CPU anchor for cross-round bench comparisons (r12).
-
-    Three rounds of drift postmortems (r9-r11 window-drift rulings, the
-    r11 verdict's 1.11x common-40 regression on untouched code) keep
-    hitting the same wall: a round-over-round delta can't be split into
-    host-speed change vs code change because nothing in the record
-    measures the HOST. This fixed workload does — a single-core md5
-    chain (pure CPU, no IO, no JVM) and a 16-way parallel run of the
-    same chain (exposes noisy-neighbor steal). Both land in the record
-    line and bench_diag.json: divide a round's per-query medians by the
-    probe ratio before calling anything a regression."""
+    """Host-speed anchor for cross-run comparisons: a single-core md5
+    chain (pure CPU, no IO, no JVM) and the median of a 16-way parallel
+    run of it (exposes noisy-neighbour steal). Divide a run's medians by
+    the probe ratio before calling a cross-run delta a regression."""
     import multiprocessing as mp
 
     single = _md5_chain()
     try:
         with mp.Pool(16) as pool:
-            times = sorted(pool.map(_md5_chain, range(16)))
-        par16 = times[8]
+            par16 = sorted(pool.map(_md5_chain, range(16)))[8]
     except Exception:
         par16 = -1.0
     return {"md5_single_s": round(single, 3), "md5_par16_med_s": round(par16, 3)}
 
 
+def _prior_medians() -> dict[str, float]:
+    """Medians of the committed record; {} when there is none."""
+    try:
+        with open(DIAG) as f:
+            return {n: s["median"] for n, s in json.load(f)["queries"].items()}
+    except (OSError, ValueError, KeyError, TypeError):
+        return {}
+
+
+def headline_line(diag: dict) -> str:
+    """The one JSON line the driver parses from its 2000-char output
+    tail. At most 1,800 chars: when the per-name medians push past that,
+    only the slowest names are kept and the rest counted; the complete
+    record is always in bench_diag.json."""
+    medians = {n: s["median"] for n, s in diag["queries"].items()}
+    record = {
+        "metric": "headline_queries_total",
+        "value": round(sum(medians.values()), 2),
+        "unit": "sec",
+        "queries": medians,
+        "sf": diag["sf"],
+        "ok": diag["ok"],
+        "engine_tree_sha256": diag["engine_tree_sha256"],
+        "host_probe": diag["host_probe"],
+        "host_probe_tiers": {k: v["md5_single_s"] for k, v in diag["host_probe_tiers"].items()},
+    }
+    if diag["streaming"]:
+        record["streaming"] = diag["streaming"]
+    if diag["errors"]:
+        # a failed name is missing from the total, which would otherwise
+        # read as an improvement
+        record["isolate_errors"] = len(diag["errors"])
+        record["partial"] = True
+    if diag["unreliable"]:
+        record["unreliable"] = diag["unreliable"]
+    line = json.dumps(record)
+    while len(line) > 1800 and len(record["queries"]) > 5:
+        q = record["queries"]
+        record["queries"] = dict(sorted(q.items(), key=lambda kv: -kv[1])[: max(5, len(q) - 8)])
+        record["queries_omitted"] = len(medians) - len(record["queries"])
+        line = json.dumps(record)
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
+    prior = _prior_medians()
+    t_start = time.time()
     host_probe = _host_speed_probe()
-
     _quiet_stderr()
+
+    # Streaming first (measured after the batch tiers in one process, the
+    # rates once read 10-27% low), with its own host anchor beside the
+    # rates it governs.
+    streaming: dict = {}
+    if os.environ.get("SPARK_GRAFT_STREAM_BENCH", "1") != "0":
+        streaming["host_probe"] = _host_speed_probe()
+        for topo in STREAM_TOPOLOGIES:
+            streaming |= _stream(topo, sf_dir)
 
     from delfos_etl_pipeline_spark.queries import queries
     from delfos_etl_pipeline_spark.sources.parquet import load_table
 
-    qs = dict(queries())
-
-    # SESSION AGING FIX (VERDICT r5 item 2 / r6 item 2): one long-lived
-    # session accumulates state (cache-manager entries, shuffle/broadcast
-    # refs, listener queues, code-cache pressure) that drifted per-query
-    # medians by up to ~0.6 s between rounds on bit-identical code —
-    # round-over-round deltas were measurement, not regression. The run is
-    # therefore split into chunks of SPARK_GRAFT_SESSION_QUERIES (default
-    # 24) queries, each timed in a FRESH SparkContext. The JVM itself is
-    # reused across restarts (py4j gateway survives spark.stop()), so C2
-    # JIT warmth persists while per-session state resets — each chunk's
-    # numbers start from the same session age. Per-chunk warmup re-runs
-    # janino codegen for that chunk's plan shapes before timing.
-    warm_iters = int(os.environ.get("SPARK_GRAFT_WARM_ITERS", "1"))
-    timed_iters = int(os.environ.get("SPARK_GRAFT_TIMED_ITERS", "3"))
-    # 24 -> 8 in round 9: across three full r9 runs, each session left a
-    # few co-resident queries ~1.2-1.9x above their isolated truth (a
-    # different handful each run — residual GC/allocator pressure, not a
-    # specific neighbor). Smaller sessions shrink the blast radius; the
-    # JVM survives restarts (py4j gateway reuse), so C2 warmth is kept
-    # and the extra wall cost is ~10s per extra restart.
-    chunk_size = max(1, int(os.environ.get("SPARK_GRAFT_SESSION_QUERIES", "8")))
-    # IO-ISOLATION FIX (VERDICT r8 "what's wrong" 2): queries whose timed
-    # body writes or reads scratch parquet every invocation thrash the
-    # page cache and executor GC for whatever shares their session —
-    # curate_pipeline_staged (5 stage writes x 4 passes) sat in the same
-    # chunk as dedup_clusters, and BOTH recorded ~2x their isolated truth
-    # in r8 on unchanged code. Each IO-heavy name now gets its OWN fresh
-    # session; the remaining names keep normal chunking, in order.
-    isolate = {
-        "curate_pipeline_staged",       # writes 5 staged parquet boundaries
-        "dedup_substring_incremental",  # probes the persisted gram index
-        "sim_ivf_probe",                # probes the persisted IVF index
-        "dedup_minhash_incremental_indexed",  # probes the persisted
-                                              # MinHash band-bucket index
-        # round 10 persisted-index probes — same IO class as the three
-        # above (each reads its materialized index from scratch parquet)
-        "sim_pq_probe",     # probes the persisted PQ codes index
-        "sim_ivfpq_probe",  # probes the persisted IVF-PQ composed index
-        "curate_nightly_ingest",  # probes all three persisted indexes
-        "curate_nightly_ingest_day2",  # probes the MERGED three-index
-                                       # state (r11 maintenance capstone)
-        "curate_nightly_ingest_day3",  # probes the post-TAKEDOWN state
-                                       # (r12 deletion capstone)
-        "curate_nightly_ingest_day4",  # probes the COMPACTED state
-                                       # (r13 compaction capstone)
-        "sim_pq_probe_deleted",  # probes the tombstoned PQ codes clone
-        "sim_pq_probe_compacted",  # probes the compacted rewrite
-        "sim_ivf_lifecycle_bigk",  # builds+maintains the 40-cell index
-                                   # (r15 large-k maintenance capstone)
-        "sim_pq_lifecycle_bigk",   # the PQ twin (40-centroid codes)
-        # session-sensitive, not IO: the deliberately sequential 5-key
-        # single-task window — measured 3.84s in-chunk vs 3.2s in ANY
-        # fresh session (bench-style warmup+iters, reproduced across all
-        # four r9 runs); chunk-mates' residual GC/alloc pressure lands
-        # entirely on its one task. Its distributed halo-block twin
-        # (w6_rolling_median_prod) is chunk-stable and stays pooled.
-        "w6_rolling_median",
-    }
-    # DRIFT-ISOLATION (VERDICT r9 item 4): even at 8-query sessions, a
-    # rotating handful of pooled queries recorded ~1.2-1.35x their
-    # isolated truth (residual GC/allocator pressure from chunk
-    # co-residents — r9's w6_rolling_median 3.82s vs ~3.2s isolated,
-    # text_quality_classifier 2.15 vs ~1.65, emb_standardize 2.18 vs
-    # ~1.67, all on unchanged code). The victims rotate, but they are
-    # always in the expensive tail — the queries whose medians decide
-    # the headline and whose inflation the validator keeps catching. So
-    # the whole slowest-15 tail of the previous round's record now gets
-    # ONE FRESH SESSION PER QUERY (~10s restart each, JVM+JIT reused via
-    # the surviving py4j gateway): their numbers can never carry
-    # co-resident pressure, and the validator's isolated re-times become
-    # same-recipe comparisons instead of cross-harness ones.
-    isolate |= {
-        "stats_bootstrap_ci_mean", "w6_rolling_median_prod",
-        "emb_silhouette_centroid", "dedup_clusters_bigstar",
-        "sim_pq_adc_topk", "sim_ivfpq_topk", "dedup_jaccard_prefix",
-        "emb_kmeans_train", "profile_corr_matrix", "dedup_clusters",
-        "recsys_item_cosine", "emb_kmeans_step", "emb_standardize",
-        "dedup_cluster_keep_policy", "text_quality_classifier",
-        "w8_ewma",
-        # r10 validator fails/marginals: pooled + late-run second-opinion
-        # numbers for these tracked the aged JVM, not isolated truth
-        "emb_centroid_by_label", "emb_anova_f_topdims",
-        # r11 driver-window >1.4x drifters on untouched code (VERDICT r11
-        # item 4): carry their fresh-process truth in the record
-        # regardless of host window (dedup_jaccard_prefix and
-        # emb_anova_f_topdims, the other two drifters, are already above)
-        "sim_ivf_recall_eval", "tpch_q21_waiting_suppliers",
-    }
-    flow = [n for n in HEADLINE if n not in isolate]
-    # The isolate tier no longer shares this process at all — each name
-    # runs in a fully fresh python+JVM subprocess (_run_isolated, the
-    # validator's ground-truth recipe). r10 moved the tier to the FRONT
-    # of the shared-JVM run to dodge lifetime accumulation, but the r10
-    # driver run and the r11 early validated run still caught the
-    # sequential rolling-median ~1.3x above fresh-process truth: session
-    # restarts reset session state, not JVM state. Only the pooled cheap
-    # tail stays in shared-JVM chunks, where absolute deltas are small
-    # and C2 warmth carry-over is a feature.
-    chunks = [
-        flow[lo : lo + chunk_size] for lo in range(0, len(flow), chunk_size)
-    ]
-    per_query: dict[str, float] = {}
-    spread: dict[str, float] = {}
-    rng: dict[str, float] = {}
-    # Per-query recipe provenance (ADVICE r10): isolate singles warm 3x,
-    # pooled chunks warm warm_iters, second-opinion re-times warm 1x —
-    # which recipe produced each headline number was previously only
-    # implied by isolate-set membership. Recorded in bench_diag.json so
-    # cross-round comparisons of a query that moves in/out of the isolate
-    # set are visibly cross-recipe.
-    warmups: dict[str, int] = {}
-
-    # Streaming throughput (VERDICT r3 item 6): steady-state micro-batch
-    # rows/sec for the stateful streaming flagships, measured from the
-    # progress feed with warmup batches excluded (streaming/bench.py), in
-    # their own fresh session. Measured FIRST, before the ~40 batch
-    # sessions: r10 found the end-of-run placement depressed all three
-    # rates 10-27% below a standalone measurement on unchanged code
-    # (JVM-lifetime accumulation — code-cache/fragmentation — survives
-    # the py4j-reused session restarts), while the front placement
-    # reproduces standalone truth. Disable with SPARK_GRAFT_STREAM_BENCH=0.
-    streaming: dict[str, float | str | dict | list] = {}
-    if os.environ.get("SPARK_GRAFT_STREAM_BENCH", "1") != "0":
-        # VERDICT r12 item 2: one fresh python+JVM subprocess per
-        # topology (the batch isolate tier's discipline) — the r12
-        # in-process rates fell 28-31% on untouched code with no way to
-        # tell harness state from host speed; a fresh process per
-        # topology plus the recorded host_probe anchor closes that.
-        # VERDICT r14 item 4: the anchor must sit BESIDE the rates it
-        # governs — the r14 driver and builder streaming rates disagreed
-        # in SIGN on the same recipe, and the run-start anchor (measured
-        # minutes earlier) could not arbitrate. Probed here, immediately
-        # before the three topology subprocesses launch.
-        streaming["host_probe"] = _host_speed_probe()
-        # Reliability gate (round 15): the r15 first run recorded the
-        # dedup topology at 33.0k rows/s against 118-124k isolated
-        # re-runs — a single-subprocess stall (GC/compile pause inside
-        # the measurement window) with nothing to catch it, the exact
-        # class the batch tier's validator rejects. Each topology now
-        # runs up to three subprocesses: two runs agreeing within 20%
-        # publish their mean; otherwise a third arbitrates and the
-        # MEDIAN publishes. All raw runs land in the diag so a
-        # published rate is never a lone sample.
-        for topo in ("windowed_agg", "dedup", "stream_join"):
-            runs: list[float] = []
-            err = None
-            for _attempt in range(3):
-                res = _run_stream_isolated(topo, cpus)
-                if "error" in res:
-                    err = str(res["error"])[:80]
-                    break
-                runs.append(res["rows_per_sec"])
-                if len(runs) == 2 and min(runs) >= 0.8 * max(runs):
-                    break
-            if err is not None and not runs:
-                # a broken harness must be visible, not a silent 0.0
-                streaming[f"{topo}_error"] = err
+    qs = queries()
+    stats: dict[str, dict] = {}
+    errors: dict[str, str] = {}
+    pooled = [n for n in HEADLINE if not starts_fresh(n, prior)]
+    tiers = {"pooled_start": _host_speed_probe()}
+    for lo in range(0, len(pooled), CHUNK):
+        # A fresh SparkContext per chunk resets session state (cache
+        # manager, shuffle and broadcast refs) while the JVM and its JIT
+        # warmth survive through the py4j gateway.
+        spark = _new_session()
+        load_table(spark, sf_dir, "lineitem").count()
+        for name in pooled[lo : lo + CHUNK]:
+            try:
+                samples = time_query(spark, qs[name], sf_dir, WARM_POOLED, ITERS)
+            except Exception as e:
+                errors[name] = repr(e)[-300:]
                 continue
-            if len(runs) >= 3:
-                rate = sorted(runs)[1]
-            else:
-                rate = round(sum(runs) / len(runs), 1)
-            streaming[f"{topo}_rows_per_sec"] = rate
-            streaming[f"{topo}_runs"] = runs
-    # Isolate tier: one fresh subprocess per name, sequential (bench
-    # never runs Spark work concurrently with itself). 3 warmups — a
-    # fresh process has cold C2 JIT; this is the recipe
-    # tools/bench_validate.py re-measures with, so these medians are
-    # same-recipe comparable with the validator BY CONSTRUCTION.
-    isolate_errors: dict[str, str] = {}
-    iso_warm = max(warm_iters, 3)
-    # per-tier anchor (VERDICT r14 item 4): the isolate tier runs for
-    # many minutes after the run-start probe; stamp the host speed at
-    # tier entry so a tier-local window shift is attributable.
-    tier_probes: dict[str, dict] = {"isolate_start": _host_speed_probe()}
-    for name in [n for n in HEADLINE if n in isolate]:
-        res = _run_isolated(name, sf_dir, cpus, iso_warm, timed_iters)
-        if "error" in res:
-            isolate_errors[name] = res["error"]  # visible in diag, never
-            continue                             # a silent omission
-        per_query[name] = res["median"]
-        spread[name] = res["spread"]
-        rng[name] = res["range"]
-        warmups[name] = iso_warm
-    tier_probes["pooled_start"] = _host_speed_probe()
-    for chunk in chunks:
-        spark = _new_session(cpus)
-        # Warmup, not counted: a trivial scan, then one pass of the
-        # chunk's queries — janino whole-stage-codegen compilation and
-        # file-index caches are per-plan-shape one-time costs (~5s for
-        # the wide dedup plans alone); the timed iterations then measure
-        # steady-state engine throughput, not first-compile latency.
-        # Pooled chunks keep warm_iters — their shapes accumulate JIT
-        # warmth chunk over chunk in the shared JVM (a leftover
-        # single-name chunk still gets the 3-warmup fresh-shape recipe).
-        chunk_warm = max(warm_iters, 3) if len(chunk) == 1 else warm_iters
-        load_table(spark, sf_dir, "lineitem").count()
-        for _ in range(chunk_warm):
-            for name in chunk:
-                try:
-                    qs[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                except Exception:
-                    pass  # warmup is best-effort; timed run surfaces errors
-            # drop warmup persist()s so storage memory + cache-manager
-            # state don't leak into the timed runs
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-
-        # Median-of-N timed iterations with recorded spread: single-shot
-        # timings at this scale carry 2-3× GC/scheduling noise (measured:
-        # the same warm query ranged 1.6-4.6s across runs). The median is
-        # the headline number. "spread" is the MEDIAN'S nearest-neighbor
-        # gap (min distance from the median sample to an adjacent sorted
-        # sample) — the stability of the reported number itself, which is
-        # what bench_validate's unreliable-measurement rule tests. The
-        # max-min "range" is recorded too, but with N=3 a single GC/page
-        # -cache outlier owns max-min while the median stays repeatable —
-        # r9 measured: range > 0.5 x median for ~60 honest sub-second
-        # queries whose two fastest samples agreed within 0.1s.
-        for name in chunk:
-            warmups[name] = chunk_warm
-            fn = qs[name]
-            times = []
-            for _ in range(timed_iters):
-                # GC outside the timer (JMH practice): releases
-                # accumulated shuffle/broadcast refs so earlier queries'
-                # garbage doesn't surface as pause time in later ones
-                spark.sparkContext._jvm.System.gc()
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                times.append(time.time() - t0)
-            times.sort()
-            mid = len(times) // 2
-            per_query[name] = round(times[mid], 2)
-            gaps = []
-            if mid > 0:
-                gaps.append(times[mid] - times[mid - 1])
-            if mid + 1 < len(times):
-                gaps.append(times[mid + 1] - times[mid])
-            spread[name] = round(min(gaps) if gaps else 0.0, 2)
-            rng[name] = round(times[-1] - times[0], 2)
+            stats[name] = summary(samples) | {"recipe": "pooled", "warmups": WARM_POOLED}
         spark.stop()
 
-    # SECOND-OPINION PASS (VERDICT r9 item 1 — "a bench record and its
-    # validator must agree"): tools/bench_validate.py re-times queries in
-    # FRESH single-query sessions and fails any pooled median that
-    # chunk co-residency inflated (r9 shipped w6_rolling_median ok:false;
-    # re-validation failed text_quality_classifier too). Rather than
-    # shipping a record the validator will reject, the bench itself now
-    # re-times every still-pooled query whose median is large enough for
-    # ~1.3x drift to exceed the validator's jitter floor (>= 1.2s) with
-    # EXACTLY the validator's re-measure recipe — fresh session, 1
-    # warmup, timed_iters runs — and ALWAYS substitutes the fresh
-    # single-session median (ADVICE r10: min-of-two-noisy-medians is a
-    # downward-biased estimator — a lucky fresh session exists too —
-    # and selecting whichever is smaller fits the record to the very
-    # instrument meant to independently check it; the fresh single-query
-    # session is the declared canonical recipe, so its number is the
-    # record regardless of direction). Never silent: both numbers land
-    # in bench_diag.json under "second_opinion", so the substitution is
-    # auditable.
-    second_opinion: dict[str, dict[str, float]] = {}
-    recheck = [
-        n for n in per_query
-        if n not in isolate and per_query[n] >= 1.2
+    retimed: dict[str, float] = {}
+    tiers["fresh_start"] = _host_speed_probe()
+    fresh = [
+        n for n in HEADLINE
+        if n not in pooled or (n in stats and retime_fresh(stats[n]))
     ]
-    for name in recheck:
-        spark = _new_session(cpus)
-        load_table(spark, sf_dir, "lineitem").count()
-        fn = qs[name]
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            spark.stop()
-            continue  # timed pass already recorded the failure mode
-        times = []
-        for _ in range(timed_iters):
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(time.time() - t0)
-        spark.stop()
-        times.sort()
-        mid = len(times) // 2
-        fresh = round(times[mid], 2)
-        second_opinion[name] = {"pooled": per_query[name], "fresh": fresh}
-        per_query[name] = fresh
-        warmups[name] = 1
-        gaps = []
-        if mid > 0:
-            gaps.append(times[mid] - times[mid - 1])
-        if mid + 1 < len(times):
-            gaps.append(times[mid + 1] - times[mid])
-        spread[name] = round(min(gaps) if gaps else 0.0, 2)
-        rng[name] = round(times[-1] - times[0], 2)
+    for name in fresh:
+        res = _time_fresh(name, sf_dir)
+        if "error" in res:
+            errors[name] = res["error"]
+            continue
+        if name in stats:
+            retimed[name] = stats[name]["median"]
+        stats[name] = res
 
-    # RELIABILITY GATE (VERDICT r12 item 2 — "a record must never
-    # contradict its own validator"): bench_validate rejects any
-    # measurement whose spread exceeds 0.5 x its median ("unreliable
-    # bench measurement") — r12's driver window published
-    # curate_nightly_ingest_day2 at a contended median the validator
-    # then rejected (spread 4.02s > 0.5 x 5.94s; isolated truth
-    # 2.4s). The same rule now runs INSIDE bench: every name failing it
-    # is re-timed with the isolate recipe (fresh process, up to 2
-    # retries); if no retry produces a reliable measurement, the name
-    # is listed under "unreliable" in the official record so no
-    # cross-round comparison treats the number as settled.
-    unreliable: list[str] = []
-    retries_diag: dict[str, int] = {}
-
-    def _is_reliable(name: str) -> bool:
-        # The 1.0s floor keeps the gate on the names whose inflation the
-        # validator historically caught (its sample is the expensive
-        # tail): sub-second medians carry scheduling jitter that makes
-        # spread > 0.5 x median routine and harmless (r9 measured ~60
-        # such names), and re-timing each would cost a 15s JVM launch
-        # for a number that cannot move any cross-round comparison.
-        return (
-            per_query[name] < 1.0
-            or spread[name] <= 0.5 * per_query[name]
-        )
-
-    for name in sorted(per_query):
-        tries = 0
-        while not _is_reliable(name) and tries < 2:
-            res = _run_isolated(name, sf_dir, cpus, iso_warm, timed_iters)
-            tries += 1
-            if "error" in res:
-                break
-            per_query[name] = res["median"]
-            spread[name] = res["spread"]
-            rng[name] = res["range"]
-            warmups[name] = iso_warm
-        if tries:
-            retries_diag[name] = tries
-        if not _is_reliable(name):
-            unreliable.append(name)
-
-    total = round(sum(per_query.values()), 2)
-    # The driver captures only the tail of stdout, so the official record is
-    # ONE compact JSON line: 2-decimal medians, no per-query spread (round 3's
-    # full dict outgrew the capture window and the round lost its perf
-    # record). Spread/iters diagnostics go to a separate gitignored file, or
-    # inline under SPARK_GRAFT_BENCH_VERBOSE=1 for interactive runs.
-    record = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": per_query,
-        "sf": sf,
+    ordered = {n: stats[n] for n in HEADLINE if n in stats}
+    unreliable = [n for n, s in ordered.items() if not reliable(s)]
+    diag = {
+        "ok": record_ok(ordered, errors, unreliable, streaming),
+        "engine_tree_sha256": engine_tree_hash(),
+        "sf": float(m.group(1)) if m else None,
+        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "iters": ITERS,
+        "wall_s": round(time.time() - t_start),
+        "queries": ordered,
+        # pooled medians that were replaced by a fresh re-time
+        "retimed_from_pooled": retimed,
+        "errors": errors,
+        "unreliable": unreliable,
+        "streaming": streaming,
+        "host_probe": host_probe,
+        "host_probe_tiers": tiers,
     }
-    if streaming:
-        record["streaming"] = streaming
-    # ~55 chars: the host-speed anchor travels WITH the record, so the
-    # round's official numbers carry their own window calibration;
-    # host_probe_tiers adds the tier-entry anchors (streaming's rides
-    # inside the streaming section) so every tier's numbers carry the
-    # window they were measured in (VERDICT r14 item 4)
-    record["host_probe"] = host_probe
-    record["host_probe_tiers"] = {
-        k: v["md5_single_s"] for k, v in tier_probes.items()
-    }
-    if isolate_errors:
-        # a failed isolate query is missing from per_query, so the
-        # headline sum covers FEWER queries and would read as an
-        # improvement (ADVICE r11) — flag the total as partial so no
-        # cross-round comparison treats it as a full-coverage number.
-        record["isolate_errors"] = len(isolate_errors)
-        record["partial"] = True
-    if unreliable:
-        # validator-reject rule failed even after isolate retries: the
-        # number ships, but explicitly marked (VERDICT r12 item 2)
-        record["unreliable"] = sorted(unreliable)
-    if os.environ.get("SPARK_GRAFT_BENCH_VERBOSE") == "1":
-        record["spread"] = spread
-        record["iters"] = timed_iters
-    else:
-        diag_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "bench_diag.json"
-        )
-        try:
-            with open(diag_path, "w") as f:
-                json.dump(
-                    {
-                        "queries": per_query,
-                        "spread": spread,
-                        "range": rng,
-                        "warmups": warmups,
-                        "isolate_errors": isolate_errors,
-                        "iters": timed_iters,
-                        "sf": sf,
-                        "streaming": streaming,
-                        "second_opinion": second_opinion,
-                        "host_probe": host_probe,
-                        "host_probe_tiers": tier_probes,
-                        "reliability_retries": retries_diag,
-                        "unreliable": unreliable,
-                    },
-                    f,
-                )
-        except OSError:
-            pass  # diagnostics are best-effort; the headline line is the record
-    # The driver's tail capture is 2000 chars (measured from BENCH_r01-03:
-    # r03's 3.5KB line truncated to exactly 2000 and failed to parse). Keep
-    # a safety margin: if the full per-query dict pushes past ~1800, keep
-    # only the slowest queries — the ones perf review needs — and count the
-    # omissions; the complete dict is always in bench_diag.json.
-    line = json.dumps(record)
-    while len(line) > 1800 and "spread" not in record and len(record["queries"]) > 5:
-        q = record["queries"]
-        keep = dict(sorted(q.items(), key=lambda kv: -kv[1])[: max(5, len(q) - 8)])
-        record["queries"] = keep
-        record["queries_omitted"] = len(per_query) - len(keep)
-        line = json.dumps(record)
-    print(line)
+    with open(DIAG, "w") as f:
+        json.dump(diag, f, indent=1)
+    print(headline_line(diag))
 
 
 if __name__ == "__main__":

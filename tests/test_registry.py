@@ -141,39 +141,38 @@ def test_window_order_from_records():
     assert Q.window_order(names, oracled, {}) == names
 
 
-def test_bench_validate_record_stamped_at_head():
-    """The committed bench_validate.json must be produced by the SHIPPED
-    engine (VERDICT r14 item 1, third round of the stale-record genus:
-    code landing after the validated record shipped an unvalidated
-    number every time, and nothing failed). The validator stamps
-    engine_tree_hash() — a content hash of every timing-relevant file —
-    into the record when it writes it; this test FAILS whenever the
-    working tree's engine no longer matches the record's stamp, so an
-    engine commit after the record breaks the build instead of
-    shipping. Fix = re-run `python bench.py` then
-    `python tools/bench_validate.py` (ALONE) and commit the record."""
-    import importlib.util
+def test_bench_record_stamped_ok_at_head():
+    """The committed bench_diag.json must be produced by the SHIPPED
+    engine, pass its own verdict, and time every expensive name in a
+    fresh process. bench.py stamps engine_tree_hash(), a content hash of
+    every timing-relevant file, into the record; an engine commit after
+    the record therefore breaks the build instead of shipping an
+    unmeasured number. Fix = re-run `python bench.py` ALONE after the
+    last engine edit and commit bench_diag.json."""
     import json
-    import os
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_validate", os.path.join(repo, "tools", "bench_validate.py")
-    )
-    bv = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bv)
-    with open(os.path.join(repo, "bench_validate.json")) as f:
+    import bench
+
+    with open(bench.DIAG) as f:
         rec = json.load(f)
-    stamp = rec.get("engine_tree_sha256")
-    assert stamp is not None, (
-        "bench_validate.json carries no engine_tree_sha256 stamp — it "
-        "predates the round-15 record discipline (or was written by an "
-        "external tool); re-run bench.py + tools/bench_validate.py"
-    )
-    head = bv.engine_tree_hash()
+    head = bench.engine_tree_hash()
+    stamp = rec.get("engine_tree_sha256", "")
     assert stamp == head, (
-        "bench_validate.json was recorded on a DIFFERENT engine tree "
-        f"(record {stamp[:12]}…, working tree {head[:12]}…) — the "
-        "validated numbers do not describe the shipped code; re-run "
-        "bench.py + tools/bench_validate.py at HEAD and commit the record"
+        "bench_diag.json was recorded on a DIFFERENT engine tree "
+        f"(record {stamp[:12]}…, working tree {head[:12]}…); re-run "
+        "bench.py at HEAD and commit the record"
+    )
+    assert rec["ok"] is True, (
+        "bench_diag.json is not ok: "
+        f"errors={sorted(rec['errors'])} unreliable={rec['unreliable']} "
+        f"missing={[n for n in bench.HEADLINE if n not in rec['queries']]} "
+        f"streaming_errors={[k for k in rec['streaming'] if k.endswith('_error')]}"
+    )
+    pooled_expensive = [
+        n for n, s in rec["queries"].items()
+        if s["median"] >= bench.FRESH_S and s["recipe"] != "fresh"
+    ]
+    assert not pooled_expensive, (
+        f"names with a median >= {bench.FRESH_S}s not timed fresh: "
+        f"{pooled_expensive}"
     )

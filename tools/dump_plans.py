@@ -1,8 +1,8 @@
-"""Dump .explain("formatted") for named queries to plans/<round>/<name>_<tag>.txt.
+"""Dump .explain("formatted") for named queries to plans/<name>_<tag>.txt.
 
 Usage: python tools/dump_plans.py <tag> <query ...>
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_PLANS_ROUND (default r16).
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM, as for
+bench.py, whose session conf is used.
 
 Plan capture only — no timed execution; safe to run while other work is
 in flight (plans are timing-independent). State-building accessors
@@ -22,24 +22,14 @@ def main() -> None:
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     outdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r16"),
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
     )
     os.makedirs(outdir, exist_ok=True)
 
-    from delfos_etl_pipeline_spark import get_spark
+    from bench import _new_session
     from delfos_etl_pipeline_spark.queries import queries
 
-    spark = get_spark(
-        "delfos-plan-dump",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.ui.showConsoleProgress": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _new_session()
     qs = queries()
     for name in names:
         try:

@@ -11,6 +11,8 @@ For each named query, in one fresh session per name:
 Prints one JSON line per query. Methodology matches the SCALE.md r15
 emb_kmeans_step variance pinning; used to decide where optimization
 effort goes (guide §1).
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM, as for
+bench.py, whose session conf is used.
 """
 
 from __future__ import annotations
@@ -26,23 +28,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from delfos_etl_pipeline_spark import get_spark
+    from bench import _new_session
     from delfos_etl_pipeline_spark.queries import queries
     from delfos_etl_pipeline_spark.sources.parquet import load_table
 
-    spark = get_spark(
-        "delfos-profile-split",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": "16g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _new_session()
     qs = queries()
     load_table(spark, sf_dir, "lineitem").count()
     for name in names:
