@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import subprocess
 import sys
 import time
@@ -548,18 +549,24 @@ def _md5_chain(_=None) -> float:
 
 def _host_speed_probe() -> dict[str, float]:
     """Host-speed anchor for cross-run comparisons: a single-core md5
-    chain (pure CPU, no IO, no JVM) and the median of a 16-way parallel
-    run of it (exposes noisy-neighbour steal). Divide a run's medians by
+    chain (pure CPU, no IO, no JVM) and the median of one chain per CPU
+    this process may run on, run at once (exposes noisy-neighbour steal
+    without queueing chains behind each other). Divide a run's medians by
     the probe ratio before calling a cross-run delta a regression."""
     import multiprocessing as mp
 
     single = _md5_chain()
+    procs = len(os.sched_getaffinity(0))
     try:
-        with mp.Pool(16) as pool:
-            par16 = sorted(pool.map(_md5_chain, range(16)))[8]
+        with mp.Pool(procs) as pool:
+            par = statistics.median(pool.map(_md5_chain, range(procs)))
     except Exception:
-        par16 = -1.0
-    return {"md5_single_s": round(single, 3), "md5_par16_med_s": round(par16, 3)}
+        par = -1.0
+    return {
+        "md5_single_s": round(single, 3),
+        "md5_par_med_s": round(par, 3),
+        "md5_par_procs": procs,
+    }
 
 
 def _prior_medians() -> dict[str, float]:

@@ -1664,15 +1664,23 @@ def emb_silhouette_centroid(spark, sf_dir):
         _t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding"),
         sf_dir, "embeddings", "vec_id",
     )
+    # Ragged and NULL embeddings follow the oracle's unnest: a dimension
+    # past an embedding's length (NULL in the padded array) is no row, a
+    # NULL element is a row with NULL xd, and a NULL or empty embedding
+    # has no rows and no score.
     pinned = "array(" + ",".join(
-        f"floor(cast(element_at(embedding, {i + 1}) as double)"
+        f"floor(cast(try_element_at(embedding, {i + 1}) as double)"
         " * 1000000.0D + 0.5D) / 1000000.0D"
         for i in range(dims)
     ) + ")"
-    x = emb.select(
-        "vec_id",
-        "label",
-        F.posexplode(F.expr(pinned)).alias("dim_idx", "xd"),
+    x = (
+        emb.select(
+            "vec_id",
+            "label",
+            F.size("embedding").alias("_n"),
+            F.posexplode(F.expr(pinned)).alias("dim_idx", "xd"),
+        )
+        .where(F.col("dim_idx") < F.col("_n"))
     )
     ct = (
         x.groupBy(F.col("label").alias("label_c"), "dim_idx")
@@ -1730,10 +1738,13 @@ def emb_silhouette_centroid(spark, sf_dir):
         ).cast("decimal(30,12)")
 
     def _dist(cent):
+        # SQL sum semantics, as the oracle's sum(term): a NULL term (a
+        # missing or NULL dimension on either side) is skipped, and a
+        # distance with no non-NULL term is NULL.
         total = F.aggregate(
             F.zip_with(F.col("_xa"), cent, _term),
-            F.lit(0).cast("decimal(30,12)"),
-            lambda acc, t: (acc + t).cast("decimal(30,12)"),
+            F.lit(None).cast("decimal(30,12)"),
+            lambda acc, t: F.coalesce(acc + t, acc, t).cast("decimal(30,12)"),
         )
         return F.sqrt(total.cast("double"))
 
@@ -1743,7 +1754,9 @@ def emb_silhouette_centroid(spark, sf_dir):
             c["label_c"].alias("label_c"), _dist(c["cent"]).alias("dist")
         ),
     )
-    xa = emb.select("vec_id", "label", F.expr(pinned).alias("_xa"))
+    xa = emb.where(F.size("embedding") > 0).select(
+        "vec_id", "label", F.expr(pinned).alias("_xa")
+    )
     s = (
         xa.crossJoin(F.broadcast(cents))
         # _d materialized in its OWN projection so the k·64 fold runs

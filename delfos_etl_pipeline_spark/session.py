@@ -40,6 +40,22 @@ _STARTUP_CONF: dict[str, str] = {
     "spark.sql.parquet.aggregatePushdown": "true",
     # Arrow for toPandas / pandas UDF exchange.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Generated classes are kept in an LRU cache keyed by their source;
+    # Spark's default holds 100. One pass over the five perfbench
+    # query_mix queries compiles 162 classes, so a cyclic pass through a
+    # 100-entry cache hits nothing, and every pass paid about 0.78 s of
+    # Janino compiles (local[4], 4 vCPUs) and then ran the new classes
+    # cold. 1,000 holds over six such passes. Static: read once, when the
+    # JVM first generates code.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # By default a whole-stage class is named after its codegen stage id,
+    # and the name is part of the cached source. AQE numbers stages in the
+    # order their inputs finish, so one pipeline came back as
+    # GeneratedIteratorForCodegenStage1 in one run and ...Stage2 in the
+    # next, and was compiled again (text_quality_classifier at sf0.001:
+    # 4-6 identical classes recompiled on its second or third run).
+    # Without the id, one pipeline is one cache key.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

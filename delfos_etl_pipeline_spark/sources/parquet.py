@@ -18,11 +18,11 @@ from __future__ import annotations
 
 import glob
 import os
-from functools import lru_cache
 
 import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Tables the driver materializes at each scale factor (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -39,8 +39,41 @@ TABLES: tuple[str, ...] = (
 )
 
 
-@lru_cache(maxsize=256)
-def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
+#: Read confs that change the schema Spark infers from a parquet footer.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: path -> (file stamp, ns-timestamp columns, {inference confs: schema}).
+_SCANS: dict[str, tuple[tuple, tuple[str, ...], dict[tuple, StructType]]] = {}
+
+
+def _stamp(path: str) -> tuple | None:
+    """(name, size, mtime_ns) of every file under a local ``path``, sorted;
+    None when ``path`` is not a local file or directory, and then nothing
+    about it is cached."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        files = []
+        for root, _, names in os.walk(path):
+            for n in names:
+                f = os.path.join(root, n)
+                st = os.stat(f)
+                files.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
+def _footer_nanos_cols(path: str) -> tuple[str, ...]:
     """Column names stored as nanosecond timestamps in ``path``'s footer."""
     if os.path.isdir(path):
         files = sorted(glob.glob(os.path.join(path, "*.parquet")))
@@ -51,23 +84,27 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
         schema = _pq.read_schema(path)
     except Exception:
         return ()
-    cols = []
-    for field in schema:
-        t = field.type
-        if getattr(t, "unit", None) == "ns":
-            cols.append(field.name)
-    return tuple(cols)
+    return tuple(f.name for f in schema if getattr(f.type, "unit", None) == "ns")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one catalog table, normalizing ns-timestamp columns.
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, tuple[str, ...]]:
+    """``spark.read.parquet(path)`` and the columns of ``path`` stored as
+    nanosecond timestamps (read as int64 ns, ``nanosAsLong`` set first).
 
-    ns→us conversion uses integer division (``div``), never float division:
-    epoch-nanos ≈ 1.7e18 exceeds double's 2^53 integer range, so a float
-    path would corrupt low-order digits.
-    """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_cols(path)
+    Spark infers a parquet schema with a one-task job on every read. The
+    schema inferred for a local path is kept and passed back through
+    ``spark.read.schema``, so a later read of the same files starts no
+    job. The entry holds the size and ``mtime_ns`` of every file under
+    the path, and its schemas are keyed on the read confs that change
+    inference, so a table rewritten at the same path, or read under other
+    confs, is inferred again."""
+    stamp = _stamp(path)
+    entry = _SCANS.get(path)
+    if stamp is None or entry is None or entry[0] != stamp:
+        entry = (stamp, _footer_nanos_cols(path), {})
+        if stamp is not None:
+            _SCANS[path] = entry
+    _, ns_cols, schemas = entry
     if ns_cols:
         # Runtime-settable SQL confs — the caller's session (e.g. the
         # driver's) need not have them at startup. The TZ pin matters
@@ -77,11 +114,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # while the DuckDB oracle compares naively.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    schema = schemas.get(confs)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path), ns_cols
     df = spark.read.parquet(path)
+    schemas[confs] = df.schema
+    return df, ns_cols
+
+
+def _ns_to_micros(df: DataFrame, ns_cols: tuple[str, ...]) -> DataFrame:
     for c in ns_cols:
         if c in df.columns:
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return _ntz_to_ltz(spark, df)
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one catalog table, normalizing ns-timestamp columns.
+
+    ns→us conversion uses integer division (``div``), never float division:
+    epoch-nanos ≈ 1.7e18 exceeds double's 2^53 integer range, so a float
+    path would corrupt low-order digits.
+    """
+    df, ns_cols = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return _ntz_to_ltz(spark, _ns_to_micros(df, ns_cols))
 
 
 def _ntz_to_ltz(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -126,19 +183,14 @@ def load_table_range(
     """
     import datetime as _dt
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_cols(path)
-
     def _to_ns(v) -> int:
         if isinstance(v, str):
             v = _dt.datetime.fromisoformat(v)
         return int(v.replace(tzinfo=_dt.timezone.utc).timestamp() * 1_000_000) * 1000
 
+    df, ns_cols = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    c = F.col(ts_col)
     if ts_col in ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
-        c = F.col(ts_col)
         if start is not None:
             df = df.where(c >= F.lit(_to_ns(start)))
         if end is not None:
@@ -146,33 +198,21 @@ def load_table_range(
             # below the next µs boundary
             bound = _to_ns(end) + (999 if inclusive_end else -1)
             df = df.where(c <= F.lit(bound))
-        for col in ns_cols:
-            if col in df.columns:
-                df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-        return df
+        return _ns_to_micros(df, ns_cols)
 
     # Filter BEFORE the NTZ→LTZ normalization: a predicate on the raw
     # (possibly TIMESTAMP_NTZ) column is a plain attribute comparison and
     # reaches the parquet reader as PushedFilters; a predicate on
     # cast(ts AS TIMESTAMP) would not. String literals coerce to the
     # column's own timestamp flavor, and with the session pinned UTC the
-    # naive and LTZ comparisons select identical rows.
+    # naive and LTZ comparisons select identical rows. Other columns may
+    # still be ns: they are converted like load_table's.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if ns_cols:
-        # the range column itself is not ns, but OTHER columns may be —
-        # without this the read fails (or surfaces raw int64) and the
-        # load_table contract (ns→µs normalization) is broken for them
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    c = F.col(ts_col)
     if start is not None:
         df = df.where(c >= F.lit(start))
     if end is not None:
         df = df.where(c <= F.lit(end) if inclusive_end else c < F.lit(end))
-    for col in ns_cols:
-        if col in df.columns:
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    return _ntz_to_ltz(spark, df)
+    return _ntz_to_ltz(spark, _ns_to_micros(df, ns_cols))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

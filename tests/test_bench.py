@@ -62,7 +62,7 @@ def test_record_ok():
 
 
 def test_headline_line_fits_1800_chars():
-    probe = {"md5_single_s": 1.234, "md5_par16_med_s": 2.345}
+    probe = {"md5_single_s": 1.234, "md5_par_med_s": 2.345, "md5_par_procs": 32}
     streaming = {"host_probe": probe}
     for topo in bench.STREAM_TOPOLOGIES:
         streaming[f"{topo}_rows_per_sec"] = 123456.7
@@ -88,6 +88,36 @@ def test_headline_line_fits_1800_chars():
     assert rec["value"] == round(total, 2)
     assert rec["queries_omitted"] == 208 - len(rec["queries"])
     assert rec["engine_tree_sha256"] == "f" * 64 and rec["partial"]
+
+
+def test_host_speed_probe_runs_one_chain_per_usable_cpu(monkeypatch):
+    """The parallel anchor runs as many chains as the process may use
+    CPUs, in a pool of that size, and records that count beside the
+    median, so it measures steal rather than its own queueing."""
+    import multiprocessing
+
+    pools = []
+
+    class FakePool:
+        def __init__(self, procs):
+            pools.append(procs)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return False
+
+        def map(self, fn, items):
+            return [fn(i) for i in items]
+
+    chains = iter([9.0, 1.0, 3.0, 2.0])
+    monkeypatch.setattr(bench, "_md5_chain", lambda _=None: next(chains))
+    monkeypatch.setattr(multiprocessing, "Pool", FakePool)
+    monkeypatch.setattr(bench.os, "sched_getaffinity", lambda _pid: {0, 2, 5})
+    probe = bench._host_speed_probe()
+    assert pools == [3]
+    assert probe == {"md5_single_s": 9.0, "md5_par_med_s": 2.0, "md5_par_procs": 3}
 
 
 def test_time_query_is_cold(spark, sf_dir):

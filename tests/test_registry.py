@@ -176,3 +176,42 @@ def test_bench_record_stamped_ok_at_head():
         f"names with a median >= {bench.FRESH_S}s not timed fresh: "
         f"{pooled_expensive}"
     )
+
+
+def test_repeat_pass_compiles_no_generated_class(spark, sf_dir):
+    """A second pass over the perfbench ``query_mix`` queries compiles no
+    generated class again: the session's codegen cache holds a pass's
+    working set (Spark's default 100 entries does not, and every pass
+    recompiled every class). Each query runs from an empty cache through
+    the ``noop`` sink, as the benchmark runs it. A run whose final plan
+    differs from the query's first run is exempt, since a new shape has
+    new classes: ``dedup_jaccard_prefix`` takes one of two AQE join
+    shapes, by which of two stages finishes first, and in a full test
+    session two queries have re-planned between their runs."""
+    import re
+
+    names = (
+        "tpch_q1_pricing_summary",
+        "w6_rolling_median_prod",
+        "text_quality_classifier",
+        "dedup_jaccard_prefix",
+        "sim_pq_adc_topk",
+    )
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    qs = Q.queries()
+
+    def run(name):
+        spark.catalog.clearCache()
+        before = compiles.getCount()
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        bus.waitUntilEmpty()
+        plan = store.executionsList().last().physicalPlanDescription()
+        return compiles.getCount() - before, re.sub(r"#\d+|plan_id=\d+|_\d+\b|codegen id : \d+", "", plan)
+
+    first = {name: run(name)[1] for name in names}
+    again = {name: run(name) for name in names}
+    same = [name for name in names if again[name][1] == first[name]]
+    assert same
+    assert {name: again[name][0] for name in same} == dict.fromkeys(same, 0)

@@ -708,3 +708,45 @@ def test_pq_encode_engines_agree_on_nonfinite(spark):
     # the all-NaN row resolves to code 0 in every subspace on BOTH sides
     all_nan = [row for row in mm if row[0] == 4][0]
     assert all(c == 0 for c in all_nan[1:])
+
+
+def test_silhouette_matches_oracle_on_ragged_and_null_embeddings(spark, tmp_path):
+    """emb_silhouette_centroid on embeddings that are short, NULL, empty,
+    all-NULL or hold a NULL element equals its DuckDB oracle exactly: a
+    missing dimension is skipped as the oracle's unnest + sum skips it,
+    and a NULL or empty embedding has no score."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from delfos_etl_pipeline_spark.queries import oracle_sql, queries
+
+    rng = np.random.default_rng(7)
+    vecs = []
+    for i in range(60):
+        v = [float(x) for x in rng.normal(i % 3, 1.0, 40 if i % 7 == 1 else 64)]
+        if i % 11 == 2:
+            v[5] = None
+        vecs.append(v)
+    vecs[9], vecs[20], vecs[31] = None, [], [None] * 64
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(vecs)), pa.int64()),
+                "label": pa.array(["abc"[i % 3] for i in range(len(vecs))]),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            }
+        ),
+        path,
+    )
+    name = "emb_silhouette_centroid"
+    got = sorted(
+        tuple(r) for r in queries()[name](spark, str(tmp_path)).select("label", "n", "silhouette").collect()
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    want = sorted(con.execute(f"SELECT label, n, silhouette FROM ({oracle_sql()[name]})").fetchall())
+    assert got == want
+    assert sum(n for _, n, _ in got) == len(vecs) - 2  # NULL and empty rows have no score

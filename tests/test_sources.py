@@ -528,3 +528,93 @@ def test_spread_small_scan_sizes_partitioned_dirs(spark, tmp_path):
         assert spread_small_scan(df, path, "id") is df
     finally:
         spark.conf.set(key, old)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reuses_schema_without_a_job(spark, sf_dir, tmp_path):
+    """A second load of an unchanged path starts no Spark job (the
+    schema inferred by the first is reused) and gives the same schema and
+    rows; the first load of a new path does infer."""
+    import shutil
+
+    from delfos_etl_pipeline_spark.sources.parquet import load_table
+
+    shutil.copy(os.path.join(sf_dir, "lineitem.parquet"), tmp_path / "lineitem.parquet")
+    first, jobs1 = _jobs_in_group(
+        spark, "load_table_first", lambda: load_table(spark, str(tmp_path), "lineitem")
+    )
+    again, jobs2 = _jobs_in_group(
+        spark, "load_table_again", lambda: load_table(spark, str(tmp_path), "lineitem")
+    )
+    assert jobs1 >= 1 and jobs2 == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_load_table_sees_a_table_rewritten_at_the_same_path(spark, tmp_path):
+    """A table rewritten in place with an added column, then with a
+    retyped one, loads with the new schema and rows each time."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from delfos_etl_pipeline_spark.sources.parquet import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2, 3], pa.int32())}), path)
+    assert load_table(spark, str(tmp_path), "t").schema.simpleString() == "struct<k:int>"
+    pq.write_table(pa.table({"k": pa.array([1, 2, 3], pa.int32()), "v": ["a", "b", "c"]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.schema.simpleString() == "struct<k:int,v:string>"
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b"), (3, "c")]
+    pq.write_table(pa.table({"k": pa.array([4, 5], pa.int64()), "v": ["d", "e"]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert sorted(tuple(r) for r in df.collect()) == [(4, "d"), (5, "e")]
+
+
+def test_load_table_timestamp_normalization_survives_schema_reuse(spark, tmp_path):
+    """On an ``events`` table with a nanosecond ``ts`` and a naive
+    microsecond column, the first load and the reused-schema load both
+    truncate ns to µs and turn TIMESTAMP_NTZ into TIMESTAMP."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from delfos_etl_pipeline_spark.sources.parquet import load_table
+
+    ns = [1_704_067_200_123_456_789, 1_704_153_600_000_000_999, -1]
+    micros = [abs(n) // 1000 * (1 if n >= 0 else -1) for n in ns]  # `div` truncates toward 0
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+                "seen": pa.array(micros, pa.timestamp("us")),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    want = [
+        (i, dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=us))
+        for i, us in zip((1, 2, 3), micros)
+    ]
+    for _ in range(2):
+        df = load_table(spark, str(tmp_path), "events")
+        assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+        assert isinstance(df.schema["seen"].dataType, T.TimestampType)
+        rows = df.selectExpr(
+            "event_id", "cast(ts AS TIMESTAMP_NTZ) AS ts", "cast(seen AS TIMESTAMP_NTZ) AS seen"
+        ).collect()
+        assert sorted((r.event_id, r.ts) for r in rows) == want
+        assert all(r.ts == r.seen for r in rows)
