@@ -79,11 +79,8 @@ def curate_decontaminate(spark, sf_dir):
 def sample_token_budget(spark, sf_dir):
     """Deterministic corpus sample under a 10k-token global budget:
     md5-of-id priority order, exact global prefix sum of token counts,
-    keep while within budget. The prefix sum is the two-phase distributed
-    scan (text/curation.py _global_prefix_sum) — NOT a partitionless
-    window, which would collapse to one task; the oracle's single-window
-    form is equivalent because prefix sums over a total order don't
-    depend on partitioning."""
+    keep while within budget. The prefix sum comes from
+    operators/prefix.py::prefix_scan."""
     from delfos_etl_pipeline_spark.text.curation import token_budget_sample
 
     return token_budget_sample(
@@ -646,13 +643,9 @@ def curate_ppl_buckets(spark, sf_dir):
     middle, and drop the gibberish tail of a web crawl. Returns the
     per-(lang, bucket) audit: doc counts, char mass, and score range.
 
-    The tercile assignment is NTILE(3) computed WITHOUT a
-    single-task-per-language window: operators/rank.py::distributed_rank
-    range-partitions on (lang, score, doc_id) so parallelism stays at
-    partition-count even when one language dominates the corpus (the
-    real skew profile of a web crawl: >40% English), then the exact
-    NTILE arithmetic (first c%3 buckets take one extra row) is a
-    projection from the rank and the broadcast per-lang counts. Score
+    The tercile assignment is NTILE(3) arithmetic (first c%3 buckets
+    take one extra row) over the per-language rank from
+    operators/rank.py::distributed_rank and the per-lang counts. Score
     ties are pinned by doc_id, and the score itself is the 6-dp
     half-up-rounded LM average re-pinned to an integer ppm, so the
     ordering — hence every bucket boundary — is bit-identical

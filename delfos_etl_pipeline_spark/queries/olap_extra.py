@@ -621,14 +621,8 @@ def skyline_orders(spark, sf_dir):
     """Skyline / Pareto frontier (Börzsönyi et al., ICDE'01): orders not
     dominated on (minimize o_totalprice, minimize o_orderdate) — the
     'cheapest-and-earliest' preference query no single ORDER BY can
-    answer. Runs the sort-based 2-D algorithm distributed
-    (operators/skyline.py::skyline_min2): per-price minima, then a
-    range-partitioned EXCLUSIVE prefix min with driver-combined
-    per-partition bases — the token-budget two-phase scan with MIN as
-    the monoid, so no global single-partition window ever appears. The
-    oracle expresses the identical dominance logic as one DuckDB window
-    (fine single-node); the exact match certifies the distributed
-    split."""
+    answer. Runs operators/skyline.py::skyline_min2, whose exclusive
+    prefix min comes from operators/prefix.py::prefix_scan."""
     from delfos_etl_pipeline_spark.operators.skyline import skyline_min2
 
     orders = _t(spark, sf_dir, "orders")

@@ -265,14 +265,8 @@ def sample_systematic(spark, sf_dir):
     cluster by chance; rows keep their global rank so an auditor can
     reconstruct exactly which stratum of the stream each one represents.
 
-    The naive plan is the classic scale trap: row_number() with no
-    PARTITION BY funnels 100 TB through ONE task. Here the rank comes
-    from operators/rank.py::distributed_rank — range partition on the
-    sort key, driver-collected per-partition counts (scalars), then
-    offset + local row_number keyed by partition id — so the plan's
-    parallelism is the partition count at every stage and the only
-    driver state is |partitions| integers. The oracle's single-node
-    window certifies the distributed rank exactly, modulo nothing."""
+    The rank comes from operators/rank.py::distributed_rank, not a
+    row_number() with no PARTITION BY."""
     from delfos_etl_pipeline_spark.operators.rank import distributed_rank
 
     ev = _t(spark, sf_dir, "events").select(

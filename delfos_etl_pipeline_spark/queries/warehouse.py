@@ -2195,14 +2195,9 @@ def ks_two_sample(spark, sf_dir):
 
     D = max over observed values of |ECDF_a - ECDF_b|, with the argmax
     value reported (smallest value attaining D, deterministic under
-    ties). Plan: per-value pre-aggregation (distinct values, partial-agg
-    combine), TWO cumulative counts in ONE two-phase range-partitioned
-    prefix scan (text/curation.py _global_prefix_sum, generalized to
-    parallel sums — no partitionless window anywhere), group totals as a
-    1-row broadcast, and a scalar struct-max reduce. Everything after
-    the event scan operates on |distinct values| rows; the driver sees
-    |partitions| offset rows, never data."""
-    from delfos_etl_pipeline_spark.text.curation import _global_prefix_sum
+    ties). Both cumulative counts over the distinct values come from one
+    ``operators/prefix.py::prefix_scan``."""
+    from delfos_etl_pipeline_spark.operators.prefix import prefix_scan
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -2213,7 +2208,7 @@ def ks_two_sample(spark, sf_dir):
         F.count(F.when(F.col("event_type") == "click", 1)).alias("ca"),
         F.count(F.when(F.col("event_type") == "purchase", 1)).alias("cb"),
     )
-    cum = _global_prefix_sum(byv, ["value"], ["ca", "cb"], ["cca", "ccb"])
+    cum = prefix_scan(byv, ["value"], {"cca": "ca", "ccb": "cb"})
     tot = ev.agg(
         F.count(F.when(F.col("event_type") == "click", 1)).alias("na"),
         F.count(F.when(F.col("event_type") == "purchase", 1)).alias("nb"),
@@ -3412,13 +3407,10 @@ def abc_pareto_parts(spark, sf_dir):
     C the tail — the inventory-analytics primitive behind stock-policy
     tiers. Revenue accumulates in the q9 scaled-integer idiom (cents ×
     cents → exact ×10⁴ units), so every sum is order-free int64. The
-    cumulative share over parts ranked by revenue is the repo's TWO-PHASE
-    distributed prefix scan (_global_prefix_sum: range-repartition on
-    (-revenue, partkey), per-partition running sums, |partitions|-row
-    offset table — no single-partition window at any scale); the grand
-    total rides the same pass as its final offset+total. Class cuts
-    compare identical exact-integer-derived doubles on both engines."""
-    from delfos_etl_pipeline_spark.text.curation import _global_prefix_sum
+    cumulative revenue over parts ranked by revenue comes from
+    ``operators/prefix.py::prefix_scan``. Class cuts compare identical
+    exact-integer-derived doubles on both engines."""
+    from delfos_etl_pipeline_spark.operators.prefix import prefix_scan
 
     li = _t(spark, sf_dir, "lineitem")
     rev_c4 = F.sum(
@@ -3428,9 +3420,7 @@ def abc_pareto_parts(spark, sf_dir):
     r = li.groupBy("l_partkey").agg(rev_c4).withColumn(
         "_neg_rev", -F.col("rev_c4")
     )
-    cum = _global_prefix_sum(
-        r, ["_neg_rev", "l_partkey"], "rev_c4", "cum_c4"
-    )
+    cum = prefix_scan(r, ["_neg_rev", "l_partkey"], {"cum_c4": "rev_c4"})
     tot = r.agg(F.sum("rev_c4").cast("bigint").alias("tot_c4"))
     share = F.col("cum_c4").cast("double") / F.col("tot_c4").cast("double")
     k = cum.crossJoin(F.broadcast(tot)).select(

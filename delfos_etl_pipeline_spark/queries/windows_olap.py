@@ -614,13 +614,7 @@ def w6_rolling_median_prod(spark, sf_dir):
     |types| = 5 tasks ever run. This twin makes bounded-ROWS-frame
     windows embarrassingly parallel via HALO BLOCKS:
 
-    1. Global per-type rank rn via the repo's two-phase distributed
-       prefix-count (range-partition on the sort key, per-partition
-       counts collected — driver-sized: |partitions|x|types| rows —
-       then offset + local row_number keyed by PARTITION ID, so the
-       rank pass parallelizes with the partition count, not |types|;
-       the partitioned relation is persisted before the collect, the
-       off-by-a-partition contract).
+    1. Per-type rank rn from operators/rank.py::distributed_rank.
     2. Each row lands in core block floor((rn-1)/4096) and is REPLAYED
        into the next block when it sits in the last 99 rows (the halo),
        so every block holds the full 99-row lookback its core rows

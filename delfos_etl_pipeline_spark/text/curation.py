@@ -19,24 +19,17 @@ expression-level Spark (no Python UDFs) with exact cross-engine oracles:
 - ``mixture_sample``: per-group (language/source) hash-rate sampling to
   hit a target mixture, deterministic per document.
 
-Budget/packing need an EXACT GLOBAL PREFIX SUM over a total order. A
-bare ``Window.orderBy`` with no partition key collapses Spark to ONE
-task — the classic scale-killer — so ``_global_prefix_sum`` implements
-the standard two-phase distributed scan instead: range-partition by the
-order key, per-partition running sums (parallel), then add each
-partition's driver-collected base offset (|partitions| rows, broadcast
-back). The result is identical to the single-window form — prefix sums
-over a total order do not depend on where partition boundaries fall —
-but every stage is parallel at any corpus size.
+Budget and packing take their exact global prefix sums from
+``operators/prefix.py::prefix_scan``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from delfos_etl_pipeline_spark.dedup.ngram import shingle_arrays
-from delfos_etl_pipeline_spark.session import local_frame
+from delfos_etl_pipeline_spark.operators.prefix import prefix_scan
 
 #: md5 hex digests are 32 lowercase hex chars; any of them sorts below
 #: "g", so "g" is the keep-everything threshold (rate >= 1.0) and ""
@@ -102,72 +95,6 @@ def decontaminate_corpus(
     )
 
 
-def _global_prefix_sum(
-    df: DataFrame,
-    order_cols: list[str],
-    value_col: str | list[str],
-    out_col: str | list[str],
-) -> DataFrame:
-    """Exact inclusive prefix sum of each ``value_col`` over the total
-    order ``order_cols`` — two-phase distributed scan (see module
-    docstring). Accepts one column or a parallel list (all sums share the
-    single repartition + offset exchange). The driver touches
-    |partitions| rows, never data."""
-    value_cols = [value_col] if isinstance(value_col, str) else list(value_col)
-    out_cols = [out_col] if isinstance(out_col, str) else list(out_col)
-    if len(value_cols) != len(out_cols):
-        raise ValueError("value_col and out_col must pair up")
-    spark = df.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism
-    part = df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-    runw = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = part.withColumn("_pid", F.spark_partition_id())
-    for i, vc in enumerate(value_cols):
-        local = local.withColumn(f"_run{i}", F.sum(vc).over(runw))
-    # PERSIST before the offsets collect: the relation is consumed twice
-    # (offset totals, then the final join), and BOTH spark_partition_id()
-    # and repartitionByRange's boundary sampling may differ between two
-    # evaluations — offsets computed against one partitioning must never
-    # be applied to a re-evaluated other (observed: cumulative counts off
-    # by a partition's worth of rows when the upstream was a groupBy).
-    # MEMORY_AND_DISK: spills, never recomputes; LRU eviction reclaims it.
-    local = local.persist()
-    # Range partitioning keeps whole key-ranges per partition, so the
-    # per-partition base offset is the sum of all lower partitions' totals.
-    totals = sorted(
-        (r["_pid"], *[r[f"_tot{i}"] for i in range(len(value_cols))])
-        for r in local.groupBy("_pid")
-        .agg(
-            *[
-                F.max(f"_run{i}").alias(f"_tot{i}")
-                for i in range(len(value_cols))
-            ]
-        )
-        .collect()
-    )
-    bases, offsets = [0] * len(value_cols), []
-    for pid, *tots in totals:
-        offsets.append((pid, *bases))
-        bases = [b + (t or 0) for b, t in zip(bases, tots)]
-    off_schema = "_pid int, " + ", ".join(
-        f"_off{i} bigint" for i in range(len(value_cols))
-    )
-    off = local_frame(spark, offsets, off_schema)
-    out = local.join(F.broadcast(off), "_pid")
-    for i, oc in enumerate(out_cols):
-        out = out.withColumn(
-            oc, (F.col(f"_run{i}") + F.col(f"_off{i}")).cast("bigint")
-        )
-    drop = ["_pid"] + [f"_run{i}" for i in range(len(value_cols))] + [
-        f"_off{i}" for i in range(len(value_cols))
-    ]
-    return out.drop(*drop)
-
-
 def token_budget_sample(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -188,7 +115,7 @@ def token_budget_sample(
         F.md5(F.col(id_col).cast("string")).alias("_pri"),
         _ws_token_count(F.col(text_col)).alias("n_tok"),
     )
-    cum = _global_prefix_sum(base, ["_pri", "doc_id"], "n_tok", "cum_tokens")
+    cum = prefix_scan(base, ["_pri", "doc_id"], {"cum_tokens": "n_tok"})
     return (
         cum.where(F.col("cum_tokens") <= budget)
         .select("doc_id", *carry_cols, "n_tok", "cum_tokens")
@@ -211,7 +138,7 @@ def pack_sequences(
         F.md5(F.col(id_col).cast("string")).alias("_pri"),
         _ws_token_count(F.col(text_col)).alias("n_tok"),
     )
-    cum = _global_prefix_sum(base, ["_pri", "doc_id"], "n_tok", "_cum")
+    cum = prefix_scan(base, ["_pri", "doc_id"], {"_cum": "n_tok"})
     offset = F.col("_cum") - F.col("n_tok")
     return cum.select(
         "doc_id",

@@ -6,8 +6,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from delfos_etl_pipeline_spark.sources.parquet import load_table
+from delfos_etl_pipeline_spark.operators.prefix import prefix_scan
 from delfos_etl_pipeline_spark.text.curation import (
-    _global_prefix_sum,
     decontaminate,
     decontaminate_corpus,
     mixture_sample,
@@ -50,7 +50,7 @@ def test_global_prefix_sum_matches_single_window(docs):
     )
     dist = {
         r.doc_id: r.cum
-        for r in _global_prefix_sum(base, ["_pri", "doc_id"], "n_tok", "cum").collect()
+        for r in prefix_scan(base, ["_pri", "doc_id"], {"cum": "n_tok"}).collect()
     }
     w = (
         Window.orderBy("_pri", "doc_id")

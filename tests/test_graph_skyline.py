@@ -83,6 +83,47 @@ def test_skyline_keeps_duplicate_frontier_rows(spark):
     assert kept == [1, 2]
 
 
+def test_skyline_orders_null_price_matches_oracle(spark, tmp_path):
+    """A NULL price group sorts first in Spark but can never be on the
+    frontier: skyline_orders must keep exactly the rows its DuckDB oracle
+    keeps when prices or dates are NULL."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from delfos_etl_pipeline_spark.queries import oracle_sql, queries
+
+    day = dt.datetime(2024, 1, 1)
+    rows = [(1, 1.0, None), (2, 2.0, 1), (3, None, 0), (4, 3.0, 5)]
+    path = str(tmp_path / "orders.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderkey": pa.array([k for k, _, _ in rows], pa.int64()),
+                "o_totalprice": pa.array([p for _, p, _ in rows], pa.float64()),
+                "o_orderdate": pa.array(
+                    [None if d is None else day + dt.timedelta(days=d)
+                     for _, _, d in rows],
+                    pa.timestamp("us"),
+                ),
+            }
+        ),
+        path,
+    )
+    name = "skyline_orders"
+    got = sorted(
+        r[0] for r in queries()[name](spark, str(tmp_path)).select("o_orderkey").collect()
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{path}')")
+    want = sorted(
+        r[0] for r in con.execute(f"SELECT o_orderkey FROM ({oracle_sql()[name]})").fetchall()
+    )
+    assert got == want == [2]
+
+
 def test_prefix_jaccard_matches_naive(spark):
     """Prefix-filtered exact Jaccard must equal the naive all-pairs join
     on synthetic docs engineered to contain hot (boilerplate) shingles."""

@@ -1,5 +1,6 @@
 """operators/rank.py::distributed_rank — exactness vs the single-task
-window form, globally and per key, on shuffled input."""
+window form, globally and per key (NULL keys included), on shuffled
+input."""
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -51,14 +52,27 @@ def test_per_key_rank_matches_window(spark):
         .count()
         == 0
     )
+    # NULL keys rank as one more group: mixed with non-NULL keys, and
+    # with every key NULL.
+    base = spark.range(100).withColumn("o", (F.col("id") * 37) % 100)
+    for k in (
+        F.when(F.col("id") % 3 == 0, None).otherwise(
+            F.concat(F.lit("k"), (F.col("id") % 2).cast("string"))
+        ),
+        F.lit(None).cast("string"),
+    ):
+        df = base.withColumn("k", k)
+        got = distributed_rank(df, order_cols=("o", "id"), key_cols=("k",))
+        w = Window.partitionBy("k").orderBy("o", "id")
+        want = df.withColumn("rn", F.row_number().over(w))
+        assert sorted(got.select("id", "rn").collect()) == sorted(
+            want.select("id", "rn").collect()
+        )
 
 
-def test_rank_column_name_and_partition_count(spark):
+def test_rank_column_name_and_no_internal_columns(spark):
     from delfos_etl_pipeline_spark.operators.rank import distributed_rank
 
     ev = _events(spark)
-    got = distributed_rank(
-        ev, order_cols=("ts", "event_id"), num_partitions=5, rank_col="pos"
-    )
-    assert "pos" in got.columns
-    assert not {"_pid", "_lrn", "_off"} & set(got.columns)
+    got = distributed_rank(ev, order_cols=("ts", "event_id"), rank_col="pos")
+    assert got.columns == [*ev.columns, "pos"]
